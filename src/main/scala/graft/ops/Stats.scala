@@ -4,13 +4,16 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Statistics operators: A1 global multi-aggregate and the W1/P6/F1-F3
-  * two-pass z-score anomaly detector (reference spark_streaming.py:78-120).
+  * z-score anomaly detector (reference spark_streaming.py:78-120).
   *
-  * The z-score detector keeps the reference's two-pass shape — collect
-  * two scalars, broadcast them back as literals — deliberately: at
-  * 100 TB an empty-frame window (`Window.partitionBy()`) would funnel
-  * every row through ONE partition, while two passes cost one extra scan
-  * and parallelize perfectly (SURVEY §4, §7.4 risk 7).
+  * The detector is a literal cut: two batch scalars (mean, stddev) are
+  * broadcast back as literals, never computed by an empty-frame window
+  * (`Window.partitionBy()`), which at 100 TB would funnel every row
+  * through ONE partition (SURVEY §4, §7.4 risk 7). Where the scalars
+  * come from is the caller's choice: [[zScoreOutliers]] spends a first
+  * pass on them, while the census pipeline reads them off the summary
+  * row it computes anyway and so scans once. [[zScoreCut]] is the one
+  * implementation of the cut for both.
   */
 object Stats {
 
@@ -44,20 +47,36 @@ object Stats {
   }
 
   /** W1+P6+F1-F3 — z-score outlier detection over column `c`
-    * (spark_streaming.py:106-115): second pass broadcasts the two batch
-    * scalars as literals, derives `abs((c - avg) / stddev)` and filters
-    * `z > threshold`. Returns the input rows plus a `<c>_z_score`
-    * column; empty result when the F2 guard (`stddev > 0`) fails.
+    * (spark_streaming.py:106-115): a first pass collects the two batch
+    * scalars, then [[zScoreCut]] applies them.
     */
   def zScoreOutliers(df: DataFrame, c: String, threshold: Double = 3.0): DataFrame = {
     val (m, s) = meanStddev(df, c)
-    val zCol = s"${c}_z_score"
-    if (s.isNaN || s <= 0.0) {
-      // F2 guard (spark_streaming.py:106): degenerate batch → no anomalies.
-      df.withColumn(zCol, lit(null).cast("double")).limit(0)
-    } else {
-      df.withColumn(zCol, abs((col(c) - lit(m)) / lit(s)))
-        .filter(col(zCol) > threshold)
-    }
+    zScoreCut(df, c, m, s, threshold)
   }
+
+  /** The cut: broadcasts `mean` and `stddev` as literals, derives
+    * `abs((c - mean) / stddev)` and keeps `z > threshold`. Returns the
+    * input rows plus a `<c>_z_score` column; empty when the F2 guard
+    * (`stddev > 0`, spark_streaming.py:106) fails.
+    */
+  def zScoreCut(df: DataFrame, c: String, mean: Double, stddev: Double,
+      threshold: Double): DataFrame = {
+    val zCol = s"${c}_z_score"
+    if (!spreadOk(stddev)) df.withColumn(zCol, lit(null).cast("double")).limit(0)
+    else df.withColumn(zCol, abs((col(c) - lit(mean)) / lit(stddev)))
+      .filter(col(zCol) > threshold)
+  }
+
+  /** Whether [[zScoreCut]] keeps any row of a column whose non-null
+    * values span `[lo, hi]` (NaN when there are none). |z| is largest
+    * at an extreme, and this is the cut's own double arithmetic, so
+    * the answer matches the filter exactly — including |z| == threshold,
+    * which is not past the cut.
+    */
+  def anyPastCut(lo: Double, hi: Double, mean: Double, stddev: Double,
+      threshold: Double): Boolean =
+    spreadOk(stddev) && Seq(lo, hi).exists(v => math.abs((v - mean) / stddev) > threshold)
+
+  private def spreadOk(stddev: Double): Boolean = !(stddev.isNaN || stddev <= 0.0)
 }

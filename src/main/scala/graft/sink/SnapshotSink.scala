@@ -16,6 +16,10 @@ trait SnapshotSink {
   /** Append one batch's rows to the named snapshot table. Rows are
     * expected to carry a `timestamp` column (epoch seconds, double) —
     * the reference's snapshot key (spark_streaming.py:89-91).
+    *
+    * Writes to DIFFERENT tables may run concurrently (the pipeline
+    * overlaps a batch's writes); one table is never written by two
+    * callers at once.
     */
   def write(table: String, df: DataFrame): Unit
 
@@ -58,10 +62,13 @@ final class ParquetSnapshotSink(root: String) extends SnapshotSink {
 final class InMemorySnapshotSink extends SnapshotSink {
   private val tables = mutable.Map.empty[String, (StructType, mutable.ArrayBuffer[Row])]
 
-  override def write(table: String, df: DataFrame): Unit = synchronized {
+  // the collect runs outside the lock so concurrent writes overlap
+  override def write(table: String, df: DataFrame): Unit = {
     val rows = df.collect()
-    val (_, buf) = tables.getOrElseUpdate(table, (df.schema, mutable.ArrayBuffer.empty[Row]))
-    buf ++= rows
+    synchronized {
+      val (_, buf) = tables.getOrElseUpdate(table, (df.schema, mutable.ArrayBuffer.empty[Row]))
+      buf ++= rows
+    }
   }
 
   override def read(spark: SparkSession, table: String): DataFrame = synchronized {
