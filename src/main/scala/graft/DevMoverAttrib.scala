@@ -8,7 +8,7 @@ package graft
   * own protocol (SCALING.md, applied to r6-simhash and r8-g3b) says
   * that must be PROVEN by interleaved reproduction, not assumed.
   *
-  * Protocol (the DevG3bAttrib shape applied to movers): the alarmed
+  * Protocol (the r8 g3b attribution shape applied to movers): the alarmed
   * queries are INTERLEAVED round-robin with a stable CONTROL query
   * from the same headline tier (q3_top_order_revenue, which moved
   * 0.675 → 0.556 in the same run) — sequential per-query blocks would

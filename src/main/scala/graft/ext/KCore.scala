@@ -233,7 +233,7 @@ object KCore {
     // materialization was 4×).
     //
     // batch = iterations per checkpoint, DEFAULT 1 — measured, twice:
-    // the round-11 DevG17Profile localized g17's peel cost to CASCADE
+    // a round-11 per-round profile localized g17's peel cost to CASCADE
     // DEPTH × ~0.2 s/round of fixed stage overhead (the frames are
     // 1-partition, ≤3.5k edges — data is irrelevant), which made
     // batching look like the lever. It is not: each un-checkpointed

@@ -47,7 +47,7 @@ object Pq {
     * the interpreted `aggregate(zip_with(...))` formulation cost
     * sim10 6.3 s at sf0.1, the native one ~5× less.
     */
-  private def l2(a: Column, b: Column): Column =
+  private[graft] def l2(a: Column, b: Column): Column =
     call_function("vec_l2sq_ll", a, b)
 
   /** Codebook as a (m, j, cent array<long>) frame — M·K rows, always
@@ -93,20 +93,6 @@ object Pq {
     corpus.select(col("vec_id"),
         posexplode(call_function("pq_codes_ll", col("qv"),
           lit(flat), lit(k), lit(subDim))).as(Seq("m", "code")))
-  }
-
-  /** The round-15 relational encode — kept as the SEMANTIC REFERENCE
-    * the native path is spec-checked against (PqCodesSpec), never on
-    * the query path.
-    */
-  private[graft] def encodeRelational(corpus: DataFrame,
-      codebooks: Seq[Seq[Seq[Long]]], subDim: Int): DataFrame = {
-    val cb = codebookDf(corpus.sparkSession, codebooks)
-    subvectors(corpus, codebooks.length, subDim)
-      .join(broadcast(cb), Seq("m"))
-      .withColumn("ds", l2(col("sub"), col("cent")))
-      .groupBy("vec_id", "m")
-      .agg(min(struct(col("ds"), col("j"))).getField("j").as("code"))
   }
 
   /** Per-probe ADC lookup table, one row per (probe_id, m, j): the

@@ -47,14 +47,14 @@ object Triangles {
     * explode. Same Σ outdeg² arithmetic, but as long-compares inside
     * one eval per EDGE instead of 82 M wedge rows (sf0.1 co-purchase)
     * streamed through SMJ-merge → broadcast-probe → 3-corner explode
-    * → hash agg. Measured (DevTriAB, sf0.1, 32 threads, outputs
-    * asserted identical): 7.0 → 2.3 s. The closing-side broadcast
+    * → hash agg. Measured (interleaved A/B, sf0.1, 32 threads,
+    * outputs asserted identical): 7.0 → 2.3 s. The closing-side broadcast
     * and its 10 M-edge guard are GONE — the one distributed step is
     * an exchange of the edge list with adjacency payloads, each array
     * O(√E) by the orientation bound, so the shape survives scale the
-    * broadcast could not. The wedge pipeline stays below as
-    * [[perNodeWedge]], the spec-checked semantic reference
-    * (TrianglesSpec pins fused ≡ wedge on random graphs).
+    * broadcast could not. The wedge pipeline is kept in the test
+    * tree as the spec-checked semantic reference (TrianglesSpec pins
+    * fused ≡ wedge on random graphs).
     */
   def perNode(edges: DataFrame): DataFrame = {
     val (e, _) = Dedup.checkpointed(edges.select("u", "v"))
@@ -79,66 +79,6 @@ object Triangles {
         col("src"), col("dst"), col("adj"), col("adjy"))).as("e"))
       .select(col("e.n").as("n"), col("e.c").as("c"))
     val perN = credits.groupBy("n").agg(sum("c").as("tri"))
-    deg.join(perN, Seq("n"), "left")
-      .select(col("n"), col("deg"), coalesce(col("tri"), lit(0L)).as("tri"))
-  }
-
-  /** The round-7..15 wedge-probe pipeline — kept as the SEMANTIC
-    * REFERENCE the fused intersection form is spec-checked against
-    * (TrianglesSpec), never on the query path.
-    */
-  private[graft] def perNodeWedge(edges: DataFrame): DataFrame = {
-    // materialize the (often expensive — a co-purchase self-join in
-    // g2's case) edge input ONCE: `edges` is referenced by the degree
-    // agg, both orientation lookups, and the closing join — without a
-    // lineage cut Spark recomputes the whole upstream per reference
-    // (measured: g2 23.0 → 4.4 s at sf0.1). Same for `oriented`,
-    // referenced three times (two wedge legs + closing edge). Blocks
-    // are reclaimed by the ContextCleaner when the plan is dropped.
-    val (e, _) = Dedup.checkpointed(edges.select("u", "v"))
-    val deg = e.select(col("u").as("n"))
-      .unionAll(e.select(col("v").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("deg"))
-    val fwd = col("du") < col("dv") ||
-      (col("du") === col("dv") && col("u") < col("v"))
-    // partitioned + sorted on the wedge key before the lineage cut
-    // ([[Dedup.checkpointedKeyed]]): the keyed leaf advertises the
-    // layout, so the wedge self-join's two legs (both keyed on src)
-    // skip their Exchange AND Sort entirely — the SMJ degenerates to
-    // a merge over the stored order (guide §2.4; the 82M-row wedge
-    // OUTPUT was never shuffled anyway, it streams into the broadcast
-    // closing probe)
-    val (oriented, _) = Dedup.checkpointedKeyed(e
-      .join(deg.select(col("n").as("u"), col("deg").as("du")), Seq("u"))
-      .join(deg.select(col("n").as("v"), col("deg").as("dv")), Seq("v"))
-      .select(
-        when(fwd, col("u")).otherwise(col("v")).as("src"),
-        when(fwd, col("v")).otherwise(col("u")).as("dst")), "src")
-    val o1 = oriented.select(col("src").as("x"), col("dst").as("y"))
-    val o2 = oriented.select(col("src").as("x"), col("dst").as("z"))
-    val wedges = o1.join(o2, Seq("x")).filter(col("y") =!= col("z"))
-    // Closing join sides are wildly asymmetric: |E| edge rows vs
-    // Σ outdeg² wedge rows (1.2M vs 82M on the sf0.1 co-purchase
-    // graph — ~19 MB of longs, just over Spark's 10 MB
-    // auto-broadcast default, so Catalyst picks a sort-merge that
-    // exchanges and sorts the WEDGE side). Broadcasting the edge
-    // list converts that into a map-side hash probe — the wedge
-    // stream never shuffles (measured: g2 cold samples 35 → 10.7 s
-    // median at sf0.1, on par with DuckDB's 11.2 s for the same
-    // pipeline — the residual IS the 82M-wedge stream, the
-    // algorithm's real Σ outdeg² cost). Guarded by edge count:
-    // past ~10M edges the
-    // broadcast stops paying and a web-scale graph reverts to SMJ —
-    // e is already checkpointed, so the count is a cheap block scan.
-    val closing = oriented.select(col("src").as("y"), col("dst").as("z"))
-    val closingSide =
-      if (e.count() <= 10000000L) broadcast(closing) else closing
-    val tri = wedges.join(closingSide, Seq("y", "z"))
-    // one pass over the wedge join's output: the explode replaces a
-    // triple unionAll that recomputed the join per corner role
-    val perN = tri
-      .select(explode(array(col("x"), col("y"), col("z"))).as("n"))
-      .groupBy("n").agg(count(lit(1)).as("tri"))
     deg.join(perN, Seq("n"), "left")
       .select(col("n"), col("deg"), coalesce(col("tri"), lit(0L)).as("tri"))
   }

@@ -11,28 +11,17 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   */
 object GraftFunctions {
 
-  val all: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (
-      new FunctionIdentifier("vec_dot_f"),
-      new ExpressionInfo(classOf[FloatVecDot].getName, "vec_dot_f"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "vec_dot_f expects exactly 2 arguments")
-        FloatVecDot(children.head, children(1))
-      }),
-    (
-      new FunctionIdentifier("vec_dot_fd"),
-      new ExpressionInfo(classOf[FloatDoubleVecDot].getName, "vec_dot_fd"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "vec_dot_fd expects exactly 2 arguments")
-        FloatDoubleVecDot(children.head, children(1))
-      }),
-    (
-      new FunctionIdentifier("vec_dot_d"),
-      new ExpressionInfo(classOf[DoubleVecDot].getName, "vec_dot_d"),
-      (children: Seq[Expression]) => {
-        require(children.length == 2, "vec_dot_d expects exactly 2 arguments")
-        DoubleVecDot(children.head, children(1))
-      }),
+  val all: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    VecDot.signatures.map { case (l, r) =>
+      val name = VecDot.name(l, r)
+      (
+        new FunctionIdentifier(name),
+        new ExpressionInfo(classOf[VecDot].getName, name),
+        (children: Seq[Expression]) => {
+          require(children.length == 2, s"$name expects exactly 2 arguments")
+          VecDot(children.head, children(1), l, r)
+        })
+    } ++ Seq(
     (
       new FunctionIdentifier("vec_l2sq_ll"),
       new ExpressionInfo(classOf[LongVecL2Sq].getName, "vec_l2sq_ll"),

@@ -18,7 +18,7 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType}
   * shuffle carries the same ratio. The dot then runs over raw bytes
   * in whole-stage codegen (a tight signed-byte multiply loop the JIT
   * can vectorize) instead of one interpreted lambda call per element —
-  * the same escalation rung as [[FloatVecDot]] (E15).
+  * the same escalation rung as [[VecDot]] (E15).
   */
 
 /** `sq8_pack(array<long>) → binary`: each element is clamped to

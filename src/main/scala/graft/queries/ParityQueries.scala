@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.{Derive, Stats}
+import graft.ops.{CoPurchase, Derive, Stats}
 import graft.read.Dashboard
 
 /** One oracle-checked query: Spark implementation + equivalent DuckDB
@@ -2336,28 +2336,13 @@ object ParityQueries {
     QueryDef(
       "g2_triangles",
       (s, d) => {
-        val op = t(s, d, "lineitem")
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          // one exchange serves both the (ok, pk) dedup and the ok
-          // self-join: hash(ok) colocates equal (ok, pk) rows, so the
-          // distinct runs partition-local and the join re-exchange
-          // disappears (round-16, guide §2.4; measured 2× off the 8×
-          // stress edge build — 6.8 → 2.8 s)
-          .repartition(col("ok"))
-          .distinct()
-        val edges = op.as("a").join(op.as("b"),
-            col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-          .select(col("a.pk").cast("long").as("u"),
-            col("b.pk").cast("long").as("v"))
-          .distinct()
+        val edges = CoPurchase.edges(t(s, d, "lineitem"), 1)
         graft.ext.Triangles.perNode(edges)
           .select(col("n").as("part_key"), col("deg"), col("tri"))
           .orderBy(col("tri").desc, col("part_key"))
           .limit(100)
       },
-      Some("""WITH op AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-             |e AS (SELECT DISTINCT CAST(a.pk AS BIGINT) AS u, CAST(b.pk AS BIGINT) AS v
-             |  FROM op a JOIN op b ON a.ok = b.ok AND a.pk < b.pk),
+      Some(s"""WITH ${CoPurchase.Sql.edges("e", 1)},
              |deg AS (SELECT n, count(*)::BIGINT AS deg FROM (
              |  SELECT u AS n FROM e UNION ALL SELECT v FROM e) GROUP BY 1),
              |o AS (SELECT
@@ -2387,29 +2372,11 @@ object ParityQueries {
     QueryDef(
       "g3_kcore",
       (s, d) => {
-        val op = t(s, d, "lineitem")
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          // one exchange serves both the (ok, pk) dedup and the ok
-          // self-join: hash(ok) colocates equal (ok, pk) rows, so the
-          // distinct runs partition-local and the join re-exchange
-          // disappears (round-16, guide §2.4; measured 2× off the 8×
-          // stress edge build — 6.8 → 2.8 s)
-          .repartition(col("ok"))
-          .distinct()
-        val edges = op.as("a").join(op.as("b"),
-            col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-          .groupBy(col("a.pk").cast("long").as("u"),
-            col("b.pk").cast("long").as("v"))
-          .agg(count(lit(1)).as("c"))
-          .filter(col("c") >= 2)
-          .select("u", "v")
+        val edges = CoPurchase.edges(t(s, d, "lineitem"), 2)
         graft.ext.KCore.peelStats(edges, k = 3, rounds = 4)
           .orderBy("round")
       },
-      Some(s"""WITH op AS MATERIALIZED (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-              |e0 AS MATERIALIZED (SELECT CAST(a.pk AS BIGINT) AS u, CAST(b.pk AS BIGINT) AS v
-              |  FROM op a JOIN op b ON a.ok = b.ok AND a.pk < b.pk
-              |  GROUP BY 1, 2 HAVING count(*) >= 2),
+      Some(s"""WITH ${CoPurchase.Sql.edges("e0", 2)},
               |${graft.ext.KCore.Sql.rounds(3, 4)}
               |${graft.ext.KCore.Sql.select(4)}""".stripMargin)),
 
@@ -2426,29 +2393,11 @@ object ParityQueries {
     QueryDef(
       "g3b_kcore_frontier",
       (s, d) => {
-        val op = t(s, d, "lineitem")
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          // one exchange serves both the (ok, pk) dedup and the ok
-          // self-join: hash(ok) colocates equal (ok, pk) rows, so the
-          // distinct runs partition-local and the join re-exchange
-          // disappears (round-16, guide §2.4; measured 2× off the 8×
-          // stress edge build — 6.8 → 2.8 s)
-          .repartition(col("ok"))
-          .distinct()
-        val edges = op.as("a").join(op.as("b"),
-            col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-          .groupBy(col("a.pk").cast("long").as("u"),
-            col("b.pk").cast("long").as("v"))
-          .agg(count(lit(1)).as("c"))
-          .filter(col("c") >= 2)
-          .select("u", "v")
+        val edges = CoPurchase.edges(t(s, d, "lineitem"), 2)
         graft.ext.KCore.peelStatsFrontier(edges, k = 3, rounds = 4)
           .orderBy("round")
       },
-      Some(s"""WITH op AS MATERIALIZED (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-              |e0 AS MATERIALIZED (SELECT CAST(a.pk AS BIGINT) AS u, CAST(b.pk AS BIGINT) AS v
-              |  FROM op a JOIN op b ON a.ok = b.ok AND a.pk < b.pk
-              |  GROUP BY 1, 2 HAVING count(*) >= 2),
+      Some(s"""WITH ${CoPurchase.Sql.edges("e0", 2)},
               |${graft.ext.KCore.Sql.rounds(3, 4)}
               |${graft.ext.KCore.Sql.select(4)}""".stripMargin)),
 
@@ -2486,22 +2435,7 @@ object ParityQueries {
     QueryDef(
       "g17_core_decomposition",
       (s, d) => {
-        val op = t(s, d, "lineitem")
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          // one exchange serves both the (ok, pk) dedup and the ok
-          // self-join: hash(ok) colocates equal (ok, pk) rows, so the
-          // distinct runs partition-local and the join re-exchange
-          // disappears (round-16, guide §2.4; measured 2× off the 8×
-          // stress edge build — 6.8 → 2.8 s)
-          .repartition(col("ok"))
-          .distinct()
-        val edges = tracked(op.as("a").join(op.as("b"),
-            col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-          .groupBy(col("a.pk").cast("long").as("u"),
-            col("b.pk").cast("long").as("v"))
-          .agg(count(lit(1)).as("c"))
-          .filter(col("c") >= 2)
-          .select("u", "v"))
+        val edges = tracked(CoPurchase.edges(t(s, d, "lineitem"), 2))
         val allNodes = edges.select(col("u").as("n"))
           .unionAll(edges.select(col("v").as("n"))).distinct()
         val surv = (2 to 5).foldLeft(
@@ -2540,10 +2474,7 @@ object ParityQueries {
           s"""(WITH e0 AS MATERIALIZED (SELECT u, v FROM $src),
              |${graft.ext.KCore.Sql.roundsEdges(k, rk(k))}
              |SELECT u, v FROM e${rk(k)})""".stripMargin
-        s"""WITH op AS MATERIALIZED (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-           |eb AS MATERIALIZED (SELECT CAST(a.pk AS BIGINT) AS u, CAST(b.pk AS BIGINT) AS v
-           |  FROM op a JOIN op b ON a.ok = b.ok AND a.pk < b.pk
-           |  GROUP BY 1, 2 HAVING count(*) >= 2),
+        s"""WITH ${CoPurchase.Sql.edges("eb", 2)},
            |nodes AS (SELECT DISTINCT n FROM (
            |  SELECT u AS n FROM eb UNION ALL SELECT v FROM eb)),
            |ek2 AS MATERIALIZED ${peel(2, "eb")},
@@ -2615,20 +2546,7 @@ object ParityQueries {
     QueryDef(
       "g19_degree_tail",
       (s, d) => {
-        val op = t(s, d, "lineitem")
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          // one exchange serves both the (ok, pk) dedup and the ok
-          // self-join: hash(ok) colocates equal (ok, pk) rows, so the
-          // distinct runs partition-local and the join re-exchange
-          // disappears (round-16, guide §2.4; measured 2× off the 8×
-          // stress edge build — 6.8 → 2.8 s)
-          .repartition(col("ok"))
-          .distinct()
-        val edges = op.as("a").join(op.as("b"),
-            col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-          .select(col("a.pk").cast("long").as("u"),
-            col("b.pk").cast("long").as("v"))
-          .distinct()
+        val edges = CoPurchase.edges(t(s, d, "lineitem"), 1)
         val deg = edges.select(col("u").as("n"))
           .unionAll(edges.select(col("v").as("n")))
           .groupBy("n").agg(count(lit(1)).as("dg"))
@@ -2644,11 +2562,7 @@ object ParityQueries {
               / col("n_nodes").cast("double"), 6).as("decay_ratio"))
           .orderBy("bucket")
       },
-      Some("""WITH op AS (SELECT DISTINCT l_orderkey AS ok,
-             |    l_partkey AS pk FROM lineitem),
-             |e AS (SELECT DISTINCT CAST(a.pk AS BIGINT) AS u,
-             |    CAST(b.pk AS BIGINT) AS v
-             |  FROM op a JOIN op b ON a.ok = b.ok AND a.pk < b.pk),
+      Some(s"""WITH ${CoPurchase.Sql.edges("e", 1)},
              |deg AS (SELECT n, CAST(count(*) AS BIGINT) AS dg FROM (
              |  SELECT u AS n FROM e UNION ALL SELECT v FROM e)
              |  GROUP BY 1),
@@ -2681,22 +2595,7 @@ object ParityQueries {
     QueryDef(
       "g20_assortativity",
       (s, d) => {
-        val op = t(s, d, "lineitem")
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          // one exchange serves both the (ok, pk) dedup and the ok
-          // self-join: hash(ok) colocates equal (ok, pk) rows, so the
-          // distinct runs partition-local and the join re-exchange
-          // disappears (round-16, guide §2.4; measured 2× off the 8×
-          // stress edge build — 6.8 → 2.8 s)
-          .repartition(col("ok"))
-          .distinct()
-        val e0 = op.as("a").join(op.as("b"),
-            col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-          .groupBy(col("a.pk").cast("long").as("u"),
-            col("b.pk").cast("long").as("v"))
-          .agg(count(lit(1)).as("c"))
-          .filter(col("c") >= 2)
-          .select("u", "v")
+        val e0 = CoPurchase.edges(t(s, d, "lineitem"), 2)
         val edges = tracked(e0.unionAll(
           e0.select(col("v").as("u"), col("u").as("v"))))
         val deg = edges.groupBy(col("u").as("n"))
@@ -2716,10 +2615,7 @@ object ParityQueries {
                 * sqrt((col("m") * col("syy") - col("sy") * col("sy")).cast("double"))),
               6).as("r"))
       },
-      Some("""WITH op AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-             |e0 AS (SELECT CAST(a.pk AS BIGINT) AS u, CAST(b.pk AS BIGINT) AS v
-             |  FROM op a JOIN op b ON a.ok = b.ok AND a.pk < b.pk
-             |  GROUP BY 1, 2 HAVING count(*) >= 2),
+      Some(s"""WITH ${CoPurchase.Sql.edges("e0", 2)},
              |ed AS (SELECT u, v FROM e0 UNION ALL SELECT v, u FROM e0),
              |dg AS (SELECT u AS n, CAST(count(*) AS BIGINT) AS dg FROM ed GROUP BY 1),
              |j AS (SELECT du.dg AS x, dv.dg AS y
@@ -2881,30 +2777,11 @@ object ParityQueries {
     QueryDef(
       "g7_ktruss",
       (s, d) => {
-        val op = t(s, d, "lineitem")
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          // one exchange serves both the (ok, pk) dedup and the ok
-          // self-join: hash(ok) colocates equal (ok, pk) rows, so the
-          // distinct runs partition-local and the join re-exchange
-          // disappears (round-16, guide §2.4; measured 2× off the 8×
-          // stress edge build — 6.8 → 2.8 s)
-          .repartition(col("ok"))
-          .distinct()
-        val edges = op.as("a")
-          .join(op.as("b"),
-            col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-          .groupBy(col("a.pk").cast("long").as("u"),
-            col("b.pk").cast("long").as("v"))
-          .agg(count(lit(1)).as("c"))
-          .filter(col("c") >= 2)
-          .select("u", "v")
+        val edges = CoPurchase.edges(t(s, d, "lineitem"), 2)
         graft.ext.Truss.peelStats(edges, k = 4, rounds = 3)
           .orderBy("round")
       },
-      Some(s"""WITH op AS MATERIALIZED (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-              |e0 AS MATERIALIZED (SELECT CAST(a.pk AS BIGINT) AS u, CAST(b.pk AS BIGINT) AS v
-              |  FROM op a JOIN op b ON a.ok = b.ok AND a.pk < b.pk
-              |  GROUP BY 1, 2 HAVING count(*) >= 2),
+      Some(s"""WITH ${CoPurchase.Sql.edges("e0", 2)},
               |${graft.ext.Truss.Sql.rounds(4, 3)}
               |${graft.ext.Truss.Sql.select(3)}""".stripMargin)),
 
@@ -3248,23 +3125,7 @@ object ParityQueries {
     QueryDef(
       "g12_transitivity",
       (s, d) => {
-        val op = t(s, d, "lineitem")
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          // one exchange serves both the (ok, pk) dedup and the ok
-          // self-join: hash(ok) colocates equal (ok, pk) rows, so the
-          // distinct runs partition-local and the join re-exchange
-          // disappears (round-16, guide §2.4; measured 2× off the 8×
-          // stress edge build — 6.8 → 2.8 s)
-          .repartition(col("ok"))
-          .distinct()
-        val edges = op.as("a")
-          .join(op.as("b"),
-            col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-          .groupBy(col("a.pk").cast("long").as("u"),
-            col("b.pk").cast("long").as("v"))
-          .agg(count(lit(1)).as("c"))
-          .filter(col("c") >= 2)
-          .select("u", "v")
+        val edges = CoPurchase.edges(t(s, d, "lineitem"), 2)
         val tri = graft.ext.Triangles.perNode(edges)
           .agg(sum("tri").as("tri3"))
         val deg = edges.select(col("u").as("n"))
@@ -3282,12 +3143,7 @@ object ParityQueries {
             round(col("tri3").cast("double") /
               col("wedges").cast("double"), 6).as("transitivity"))
       },
-      Some(s"""WITH op AS MATERIALIZED (SELECT DISTINCT l_orderkey AS ok,
-              |    l_partkey AS pk FROM lineitem),
-              |e AS MATERIALIZED (SELECT CAST(a.pk AS BIGINT) AS u,
-              |    CAST(b.pk AS BIGINT) AS v
-              |  FROM op a JOIN op b ON a.ok = b.ok AND a.pk < b.pk
-              |  GROUP BY 1, 2 HAVING count(*) >= 2),
+      Some(s"""WITH ${CoPurchase.Sql.edges("e", 2)},
               |deg AS (SELECT n, count(*)::BIGINT AS dg FROM (
               |  SELECT u AS n FROM e UNION ALL SELECT v FROM e) GROUP BY 1),
               |o AS (SELECT
@@ -4829,57 +4685,42 @@ object ParityQueries {
     // both parts are POPULAR — lift = P(a∧b)/(P(a)·P(b)) corrects
     // for the marginals and confidence gives the directional rule
     // strength): basket grid = distinct (order, part), pair counts
-    // from the same-order self-join with the a.pk < b.pk
-    // orientation and a min-support HAVING cut INSIDE the pair agg
-    // (the candidate set never leaves the shuffle unpruned — the
-    // Apriori downward-closure idea applied at the pair tier), then
-    // two marginal joins and a TakeOrdered top-20 on (6-dp lift
-    // desc, pair keys). Exact integers until the two final
-    // divisions.
+    // from the oriented same-order self-join (ops/CoPurchase) with a
+    // min-support cut INSIDE the pair agg (the candidate set never
+    // leaves the shuffle unpruned — the Apriori downward-closure idea
+    // applied at the pair tier), then two marginal joins and a
+    // TakeOrdered top-20 on (6-dp lift desc, pair keys). Exact
+    // integers until the two final divisions.
     QueryDef(
       "j10_association_rules",
       (s, d) => {
-        val op = tracked(t(s, d, "lineitem")
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          .distinct())
+        val op = tracked(CoPurchase.baskets(t(s, d, "lineitem")))
         val n = op.agg(countDistinct(col("ok")).as("__n"))
         val sup = op.groupBy("pk").agg(count(lit(1)).as("c"))
-        val pairs = op.as("a").join(op.as("b"),
-            col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-          .groupBy(col("a.pk").as("pa"), col("b.pk").as("pb"))
-          .agg(count(lit(1)).as("cab"))
-          .filter(col("cab") >= 3)
-        pairs
-          .join(sup.select(col("pk").as("pa"), col("c").as("ca")), Seq("pa"))
-          .join(sup.select(col("pk").as("pb"), col("c").as("cb")), Seq("pb"))
+        CoPurchase.pairCounts(op, 3)
+          .join(sup.select(col("pk").as("u"), col("c").as("ca")), Seq("u"))
+          .join(sup.select(col("pk").as("v"), col("c").as("cb")), Seq("v"))
           .crossJoin(broadcast(n))
-          .select(col("pa").cast("long").as("pa"),
-            col("pb").cast("long").as("pb"), col("cab"),
+          .select(col("u").as("pa"), col("v").as("pb"), col("c").as("cab"),
             col("ca"), col("cb"),
-            round(col("cab").cast("double") * col("__n") /
+            round(col("c").cast("double") * col("__n") /
               (col("ca") * col("cb")).cast("double"), 6).as("lift"),
-            round(col("cab").cast("double") / col("ca").cast("double"), 6)
+            round(col("c").cast("double") / col("ca").cast("double"), 6)
               .as("conf_a_to_b"))
           .orderBy(col("lift").desc, col("pa"), col("pb"))
           .limit(20)
       },
-      Some("""WITH op AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-             |  FROM lineitem),
-             |n AS (SELECT CAST(count(DISTINCT ok) AS BIGINT) AS n FROM op),
-             |sup AS (SELECT pk, CAST(count(*) AS BIGINT) AS c
-             |  FROM op GROUP BY 1),
-             |pairs AS (SELECT a.pk AS pa, b.pk AS pb,
-             |    CAST(count(*) AS BIGINT) AS cab
-             |  FROM op a JOIN op b ON a.ok = b.ok AND a.pk < b.pk
-             |  GROUP BY 1, 2 HAVING count(*) >= 3)
-             |SELECT CAST(pa AS BIGINT) AS pa, CAST(pb AS BIGINT) AS pb,
-             |  cab, sa.c AS ca, sb.c AS cb,
-             |  round(CAST(cab AS DOUBLE) * (SELECT n FROM n)
-             |    / CAST(sa.c * sb.c AS DOUBLE), 6) AS lift,
-             |  round(CAST(cab AS DOUBLE) / CAST(sa.c AS DOUBLE), 6)
-             |    AS conf_a_to_b
-             |FROM pairs JOIN sup sa ON pa = sa.pk JOIN sup sb ON pb = sb.pk
-             |ORDER BY lift DESC, pa, pb LIMIT 20""".stripMargin)),
+      Some(s"""WITH ${CoPurchase.Sql.edges("pairs", 3)},
+              |n AS (SELECT CAST(count(DISTINCT ok) AS BIGINT) AS n FROM op),
+              |sup AS (SELECT pk, CAST(count(*) AS BIGINT) AS c
+              |  FROM op GROUP BY 1)
+              |SELECT u AS pa, v AS pb, pairs.c AS cab, sa.c AS ca, sb.c AS cb,
+              |  round(CAST(pairs.c AS DOUBLE) * (SELECT n FROM n)
+              |    / CAST(sa.c * sb.c AS DOUBLE), 6) AS lift,
+              |  round(CAST(pairs.c AS DOUBLE) / CAST(sa.c AS DOUBLE), 6)
+              |    AS conf_a_to_b
+              |FROM pairs JOIN sup sa ON u = sa.pk JOIN sup sb ON v = sb.pk
+              |ORDER BY lift DESC, pa, pb LIMIT 20""".stripMargin)),
 
     // ----- Maximum drawdown of daily revenue (the peak-to-trough
     // monitoring scalar completing t_record_breaks: record-breaks
@@ -5917,12 +5758,8 @@ object ParityQueries {
           .select(col("o_custkey").cast("long").as("cust"),
             col("l_partkey").cast("long").as("part")).distinct())
         val deg = cp.groupBy("cust").agg(count(lit(1)).as("dg"))
-        val op = li.select(col("l_orderkey").as("ok"),
-          col("l_partkey").cast("long").as("part")).distinct()
-        val co = op.select(col("ok"), col("part").as("pa"))
-          .join(op.select(col("ok"), col("part").as("pb")), Seq("ok"))
-          .filter(col("pa") < col("pb"))
-          .select("pa", "pb").distinct()
+        val co = CoPurchase.edges(li, 1)
+          .select(col("u").as("pa"), col("v").as("pb"))
         val pairs = cp.select(col("cust"), col("part").as("pa"))
           .join(cp.select(col("cust"), col("part").as("pb")), Seq("cust"))
           .filter(col("pa") < col("pb"))
@@ -5937,15 +5774,12 @@ object ParityQueries {
           .orderBy(col("ra").desc, col("pa"), col("pb"))
           .limit(15)
       },
-      Some("""WITH cp AS (SELECT DISTINCT CAST(o_custkey AS BIGINT) AS cust,
+      Some(s"""WITH cp AS (SELECT DISTINCT CAST(o_custkey AS BIGINT) AS cust,
              |    CAST(l_partkey AS BIGINT) AS part
              |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
              |deg AS (SELECT cust, CAST(count(*) AS BIGINT) AS dg
              |  FROM cp GROUP BY 1),
-             |op AS (SELECT DISTINCT l_orderkey AS ok,
-             |    CAST(l_partkey AS BIGINT) AS part FROM lineitem),
-             |co AS (SELECT DISTINCT a.part AS pa, b.part AS pb
-             |  FROM op a JOIN op b ON a.ok = b.ok AND a.part < b.part),
+             |${CoPurchase.Sql.edges("co", 1)},
              |pairs AS (SELECT a.part AS pa, b.part AS pb,
              |    CAST(sum(1000000000000 // d.dg) AS BIGINT) AS ra,
              |    CAST(count(*) AS BIGINT) AS n_common
@@ -5953,8 +5787,8 @@ object ParityQueries {
              |  JOIN deg d ON d.cust = a.cust
              |  GROUP BY 1, 2 HAVING count(*) >= 2),
              |pred AS (SELECT p.pa, p.pb, p.n_common, p.ra FROM pairs p
-             |  LEFT JOIN co ON co.pa = p.pa AND co.pb = p.pb
-             |  WHERE co.pa IS NULL)
+             |  LEFT JOIN co ON co.u = p.pa AND co.v = p.pb
+             |  WHERE co.u IS NULL)
              |SELECT pa, pb, n_common, ra FROM pred
              |ORDER BY ra DESC, pa, pb LIMIT 15""".stripMargin)),
 
@@ -6146,21 +5980,7 @@ object ParityQueries {
     QueryDef(
       "g16_local_bridges",
       (s, d) => {
-        val op = t(s, d, "lineitem")
-          .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-          // one exchange serves both the (ok, pk) dedup and the ok
-          // self-join: hash(ok) colocates equal (ok, pk) rows, so the
-          // distinct runs partition-local and the join re-exchange
-          // disappears (round-16, guide §2.4; measured 2× off the 8×
-          // stress edge build — 6.8 → 2.8 s)
-          .repartition(col("ok"))
-          .distinct()
-        val e = tracked(op.as("a").join(op.as("b"),
-            col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-          .groupBy(col("a.pk").cast("long").as("u"),
-            col("b.pk").cast("long").as("v"))
-          .agg(count(lit(1)).as("c")).filter(col("c") >= 2)
-          .select("u", "v"))
+        val e = tracked(CoPurchase.edges(t(s, d, "lineitem"), 2))
         val sym = tracked(e.select(col("u").as("node"), col("v").as("nbr"))
           .unionAll(e.select(col("v").as("node"), col("u").as("nbr"))))
         val deg = sym.groupBy("node").agg(count(lit(1)).as("dg"))
@@ -6186,11 +6006,7 @@ object ParityQueries {
               / col("n_edges").cast("double"), 6).as("bridge_frac"))
           .orderBy((col("deg_u") + col("deg_v")).desc, col("u"), col("v"))
       },
-      Some("""WITH op AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-             |    FROM lineitem),
-             |e AS (SELECT CAST(a.pk AS BIGINT) AS u, CAST(b.pk AS BIGINT) AS v
-             |  FROM op a JOIN op b ON a.ok = b.ok AND a.pk < b.pk
-             |  GROUP BY 1, 2 HAVING count(*) >= 2),
+      Some(s"""WITH ${CoPurchase.Sql.edges("e", 2)},
              |sym AS (SELECT u AS node, v AS nbr FROM e
              |  UNION ALL SELECT v, u FROM e),
              |deg AS (SELECT node, CAST(count(*) AS BIGINT) AS dg FROM sym

@@ -20,7 +20,7 @@ class FloatVecDotSpec extends SparkSpec {
     val df = rows.toDF("a", "b")
     val diff = df.select(
         Similarity.dot(col("a"), col("b")).as("fast"),
-        Similarity.dotHof(col("a"), col("b")).as("ref"))
+        ReferenceForms.dotHof(col("a"), col("b")).as("ref"))
       .filter(col("fast") =!= col("ref"))
     assert(diff.isEmpty, diff.collect().take(3).mkString(","))
   }
@@ -38,7 +38,7 @@ class FloatVecDotSpec extends SparkSpec {
     val df = Seq.fill(200)(Array.fill(64)(rnd.nextGaussian().toFloat)).toDF("a")
     val diff = df.select(
         Similarity.dotLit(col("a"), planes).as("fast"),
-        Similarity.dotHof(col("a"), planeCol).as("ref"))
+        ReferenceForms.dotHof(col("a"), planeCol).as("ref"))
       .filter(col("fast") =!= col("ref"))
     assert(diff.isEmpty, diff.collect().take(3).mkString(","))
   }
@@ -63,7 +63,7 @@ class FloatVecDotSpec extends SparkSpec {
     // it is the same sequential-sum reference
     val diff = df.select(
         Similarity.dotD(col("a"), col("b")).as("fast"),
-        Similarity.dotHof(col("a"), col("b")).as("ref"))
+        ReferenceForms.dotHof(col("a"), col("b")).as("ref"))
       .filter(col("fast") =!= col("ref"))
     assert(diff.isEmpty, diff.collect().take(3).mkString(","))
   }
@@ -88,7 +88,7 @@ class FloatVecDotSpec extends SparkSpec {
     val df = rows.toDF("a")
     val diff = df.select(
         Similarity.l2Normalize(col("a")).as("fast"),
-        Similarity.l2NormalizeHof(col("a")).as("ref"))
+        ReferenceForms.l2NormalizeHof(col("a")).as("ref"))
       .filter(col("fast").cast("string") =!= col("ref").cast("string"))
     assert(diff.isEmpty, diff.collect().take(3).mkString(","))
   }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 /** pq_codes_ll contract (round-16, sim10's native encoder): the
   * map-side encode must be row-identical to the round-15 relational
   * reference (subvector explode → broadcast codebook join → N·M·K
-  * distances → argmin aggregate, kept as Pq.encodeRelational) —
+  * distances → argmin aggregate, kept as ReferenceForms.encodeRelational) —
   * including argmin TIES, which both sides must break to the smaller
   * code — and must throw on the two corruption shapes (wrong vector
   * length, null element).
@@ -42,7 +42,7 @@ class PqCodesSpec extends SparkSpec {
     val df = (rows ++ planted).toDF("vec_id", "qv").repartition(5)
     val got = graft.ext.Pq.encode(df, codebooks, SubDim)
       .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getInt(2)).toMap
-    val ref = graft.ext.Pq.encodeRelational(df, codebooks, SubDim)
+    val ref = ReferenceForms.encodeRelational(df, codebooks, SubDim)
       .collect().map(r => (r.getLong(0), r.getInt(1)) -> r.getInt(2)).toMap
     assert(got == ref)
     // the planted rows must all tie-break to code 1, never 3

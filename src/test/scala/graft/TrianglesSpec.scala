@@ -48,7 +48,7 @@ class TrianglesSpec extends SparkSpec {
       val e = edges(pairs: _*)
       val got = Triangles.perNode(e).collect()
         .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-      val ref = Triangles.perNodeWedge(e).collect()
+      val ref = ReferenceForms.perNodeWedge(e).collect()
         .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
       assert(got == ref, s"trial $trial diverged")
     }
