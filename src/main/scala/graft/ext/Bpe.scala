@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Lineage
+
 /** Iterative BPE merge training — the tokenizer-training inner loop
   * (count adjacent pairs → merge the argmax pair everywhere → recount)
   * that tx8's single pair count only hinted at. Word-level symbols
@@ -27,7 +29,7 @@ import org.apache.spark.sql.functions._
   * Scale shape per round: one pair-count aggregation (explode to
   * (l, r) pairs, hash agg, global top-1 — partial aggregation
   * map-side, only distinct pairs shuffle) + one map-side replace over
-  * the corpus, lineage cut per round via [[Dedup.checkpointed]] with
+  * the corpus, lineage cut per round via [[Lineage.checkpointed]] with
   * handle release (the CC round machinery). Driver traffic is ONE row
   * per round (the argmax pair). Real subword-tokenizer training runs
   * this exact loop on a corpus sample; the shape holds at 100 TB with
@@ -46,7 +48,7 @@ object Bpe {
     * pair remains (single-token documents only).
     */
   def train(docs: DataFrame, textCol: String, nRounds: Int): Seq[Merge] = {
-    var (corpus, corpusRdd) = Dedup.checkpointed(
+    var (corpus, corpusRdd) = Lineage.checkpointed(
       docs.select(call_function("replace", col(textCol), lit(" "), lit("  ")).as("core")))
     val merges = Seq.newBuilder[Merge]
     var round = 1
@@ -73,7 +75,7 @@ object Bpe {
         val padded = concat(lit(" "), col("core"), lit(" "))
         val replaced = call_function("replace", padded,
           lit(s" $l  $r "), lit(s" $l $r "))
-        val (next, nextRdd) = Dedup.checkpointed(
+        val (next, nextRdd) = Lineage.checkpointed(
           corpus.select(
             replaced.substr(lit(2), length(replaced) - 2).as("core")))
         corpusRdd.unpersist(blocking = false)

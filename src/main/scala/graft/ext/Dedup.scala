@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ops.Lineage
+
 /** Deduplication operators for LLM-training-data pipelines.
   *
   * Exact dedup is a single hash-shuffle on the fingerprint key: keys are
@@ -114,50 +116,9 @@ object Dedup {
     * the checkpoint's eager materialization) — one Spark job per
     * round, not job + convergence probe.
     */
-  /** Eager localCheckpoint + the persisted RDD's own handle (the
-    * LogicalRDD leaf the checkpointed frame reads from) — the round
-    * primitive shared by every iterative operator here (connected
-    * components, BPE merge training): cut lineage once per round,
-    * release the superseded round by ITS OWN handle (never global
-    * persistent-RDD state, so concurrent iterative jobs on one
-    * SparkContext are safe).
-    */
-  private[graft] def checkpointed(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[_]) = {
-    val cp = df.localCheckpoint()
-    val rdd = cp.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.getOrElse(sys.error("localCheckpoint did not yield a LogicalRDD leaf"))
-    (cp, rdd)
-  }
-
-  /** [[checkpointed]] with the rows hash-partitioned + sorted on `key`
-    * FIRST, so the checkpoint leaf advertises
-    * `hashpartitioning(key, N) / key ASC` and every downstream
-    * equi-join or aggregation on `key` reuses the stored layout
-    * instead of re-exchanging and re-sorting the frame (the
-    * partition-once discipline for iterative operators whose rounds
-    * re-probe one big side each round — guide §2.4). The partition
-    * count is pinned to `spark.sql.shuffle.partitions` EXPLICITLY:
-    * a count-less `repartition(col)` is an AQE coalescing target,
-    * and a coalesced read no longer satisfies plain
-    * hashpartitioning, so the checkpoint would (correctly) demote
-    * the leaf to UnknownPartitioning and rounds would pay the
-    * exchange again. Scale note: N tracks the session conf, never a
-    * local-mode constant.
-    */
-  private[graft] def checkpointedKeyed(df: DataFrame, key: String)
-      : (DataFrame, org.apache.spark.rdd.RDD[_]) = {
-    val n = df.sparkSession.sessionState.conf.numShufflePartitions
-    val (cp, rdd) =
-      checkpointed(df.repartition(n, col(key)).sortWithinPartitions(key))
-    // localCheckpoint demotes the leaf to UnknownPartitioning; rewrap
-    // it with the layout the two lines above just guaranteed
-    (org.apache.spark.sql.graftglue.Bridge.keyedCheckpointLeaf(cp, key), rdd)
-  }
-
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
       maxIter: Int = 20, jumpFrom: Int = 5): DataFrame = {
-    // PLAIN checkpoint, deliberately NOT [[checkpointedKeyed]]
+    // PLAIN checkpoint, deliberately NOT [[Lineage.checkpointedKeyed]]
     // (round-15, measured twice): the proposals join broadcasts the
     // CHANGED-frontier side, so a stored nbr layout on sym never
     // participates — keying it was a pure upfront repartition+sort of
@@ -166,14 +127,14 @@ object Dedup {
     // (PageRank/Triangles DO benefit: their rounds SMJ-probe the
     // keyed side and the final plans lose 20/4 Exchanges — the layout
     // pays only where the plan proves the reuse.)
-    val (sym, symRdd) = checkpointed(
+    val (sym, symRdd) = Lineage.checkpointed(
       edges.select(col(srcCol).as("node"), col(dstCol).as("nbr"))
         .unionAll(edges.select(col(dstCol).as("node"), col(srcCol).as("nbr"))))
     // one frame per round carries BOTH the full label set and the
     // changed flag; `labels`/`frontier` are projections of it, so each
     // round still checkpoints (= fires) exactly one action and holds
     // exactly one block set
-    var (state, stateRdd) = checkpointed(
+    var (state, stateRdd) = Lineage.checkpointed(
       sym.select(col("node")).distinct()
         .select(col("node"), col("node").as("comp"), lit(true).as("changed")))
     def labels = state.select("node", "comp")
@@ -209,7 +170,7 @@ object Dedup {
           .select(col("node"), col("comp"),
             least(col("cand"), col("__jc")).as("best"))
       val obs = org.apache.spark.sql.Observation()
-      val (next, nextRdd) = checkpointed(
+      val (next, nextRdd) = Lineage.checkpointed(
         candidates
           .select(col("node"),
             least(col("comp"), coalesce(col("best"), col("comp"))).as("comp"),

@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ops.Lineage
+
 /** Integer-exact HITS (hubs-and-authorities) over a bipartite edge
   * list — the mutual-reinforcement centrality PageRank cannot
   * express: a hub is good because it reaches good authorities, an
@@ -61,7 +63,7 @@ object Hits {
     // one lineage cut: every half-round references the (often
     // join-derived) edge input twice more — without the cut the
     // caller's edge construction re-executes per reference
-    val (e, eRdd) = Dedup.checkpointed(edges.select("hub", "auth"))
+    val (e, eRdd) = Lineage.checkpointed(edges.select("hub", "auth"))
     var hubs = e.select(col("hub")).distinct().withColumn("score", lit(Scale))
     var auths: DataFrame = null
     // per-HALF-ROUND lineage cut on the raw score vector (the
@@ -76,14 +78,14 @@ object Hits {
     val interim = scala.collection.mutable.ArrayBuffer
       .empty[org.apache.spark.rdd.RDD[_]]
     for (_ <- 1 to rounds) {
-      val (araw, arawRdd) = Dedup.checkpointed(e.join(hubs, Seq("hub"))
+      val (araw, arawRdd) = Lineage.checkpointed(e.join(hubs, Seq("hub"))
         .groupBy("auth").agg(sum("score").as("raw")))
       interim += arawRdd
       val amax = araw.agg(max("raw").as("mx"))
       auths = araw.crossJoin(broadcast(amax))
         .select(col("auth"),
           call_function("div", col("raw") * Scale, col("mx")).as("score"))
-      val (hraw, hrawRdd) = Dedup.checkpointed(e.join(auths, Seq("auth"))
+      val (hraw, hrawRdd) = Lineage.checkpointed(e.join(auths, Seq("auth"))
         .groupBy("hub").agg(sum("score").as("raw")))
       interim += hrawRdd
       val hmax = hraw.agg(max("raw").as("mx"))
@@ -95,8 +97,8 @@ object Hits {
     // edge blocks and the superseded per-round vectors — without this
     // the session pins them indefinitely (Truss/KCore unpersist per
     // round; HITS has one shared input)
-    val (hOut, hRdd) = Dedup.checkpointed(hubs)
-    val (aOut, aRdd) = Dedup.checkpointed(auths)
+    val (hOut, hRdd) = Lineage.checkpointed(hubs)
+    val (aOut, aRdd) = Lineage.checkpointed(auths)
     track(hRdd)
     track(aRdd)
     interim.foreach(_.unpersist(blocking = false))

@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ops.Lineage
+
 /** k-core peel with pinned rounds — the degeneracy-ordering primitive
   * of graph curation (Seidman's k-core; Matula/Beck peel): repeatedly
   * delete nodes whose CURRENT degree is below k, and what survives is
@@ -20,7 +22,7 @@ import org.apache.spark.sql.functions._
   * so DuckDB replays the identical peel as an unrolled CTE
   * ([[Sql.rounds]]) and must land on identical rows.
   *
-  * Iteration discipline = [[Dedup.checkpointed]], NOT plain caching:
+  * Iteration discipline = [[Lineage.checkpointed]], NOT plain caching:
   * each round's surviving edge set references the previous round
   * three times (degree agg + two anti joins), so an uncheckpointed
   * formulation grows the logical plan ~3× per round and Catalyst
@@ -59,7 +61,7 @@ object KCore {
     * R-row frame.
     */
   def peelStats(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    var (e, eRdd) = Dedup.checkpointed(edges.select("u", "v"))
+    var (e, eRdd) = Lineage.checkpointed(edges.select("u", "v"))
     // The degree table is CHECKPOINTED once per round and every
     // consumer reads the materialized blocks (round-15, guide §2.4):
     // the first cut derived `bad` lazily, so the round's checkpoint
@@ -75,16 +77,16 @@ object KCore {
     def degOf(f: DataFrame) = f.select(col("u").as("n"))
       .unionAll(f.select(col("v").as("n")))
       .groupBy("n").agg(count(lit(1)).as("dg"))
-    var (deg, degRdd) = Dedup.checkpointed(degOf(e))
+    var (deg, degRdd) = Lineage.checkpointed(degOf(e))
     val rows = (1 to rounds).map { r =>
       val bad = deg.filter(col("dg") < k).select("n")
       val nRemoved = bad.count()
-      val (next, nextRdd) = Dedup.checkpointed(
+      val (next, nextRdd) = Lineage.checkpointed(
         e.join(bad.withColumnRenamed("n", "u"), Seq("u"), "left_anti")
           .join(bad.withColumnRenamed("n", "v"), Seq("v"), "left_anti")
           .select("u", "v"))
       val nEdges = nextRdd.count()
-      val (nextDeg, nextDegRdd) = Dedup.checkpointed(degOf(next))
+      val (nextDeg, nextDegRdd) = Lineage.checkpointed(degOf(next))
       val nNodes = nextDegRdd.count()
       eRdd.unpersist(blocking = false)
       degRdd.unpersist(blocking = false)
@@ -101,19 +103,19 @@ object KCore {
   /** The surviving edge set after R pinned peel rounds at threshold
     * k — the MEMBERSHIP companion of [[peelStats]] (stats say how
     * many survive; decomposition consumers need WHO). Same per-round
-    * [[Dedup.checkpointed]] discipline, no stats actions (each round
+    * [[Lineage.checkpointed]] discipline, no stats actions (each round
     * is exactly one checkpoint job); the final round's block handle
     * goes to `track` for end-of-sweep release.
     */
   def peelEdges(edges: DataFrame, k: Int, rounds: Int,
       track: org.apache.spark.rdd.RDD[_] => Unit): DataFrame = {
-    var (e, eRdd) = Dedup.checkpointed(edges.select("u", "v"))
+    var (e, eRdd) = Lineage.checkpointed(edges.select("u", "v"))
     for (_ <- 1 to rounds) {
       val deg = e.select(col("u").as("n"))
         .unionAll(e.select(col("v").as("n")))
         .groupBy("n").agg(count(lit(1)).as("dg"))
       val bad = deg.filter(col("dg") < k).select("n")
-      val (next, nextRdd) = Dedup.checkpointed(
+      val (next, nextRdd) = Lineage.checkpointed(
         e.join(bad.withColumnRenamed("n", "u"), Seq("u"), "left_anti")
           .join(bad.withColumnRenamed("n", "v"), Seq("v"), "left_anti")
           .select("u", "v"))
@@ -146,13 +148,13 @@ object KCore {
     *  - edge deletion stays the two anti joins (a scan, but against
     *    the AQE-broadcast shrinking removed set — no shuffle of e).
     *
-    * Same per-round [[Dedup.checkpointed]] lineage discipline on BOTH
+    * Same per-round [[Lineage.checkpointed]] lineage discipline on BOTH
     * rolling frames (edges and degrees), superseded blocks released
     * by their RDD handles.
     */
   def peelStatsFrontier(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    var (e, eRdd) = Dedup.checkpointed(edges.select("u", "v"))
-    var (deg, degRdd) = Dedup.checkpointed(
+    var (e, eRdd) = Lineage.checkpointed(edges.select("u", "v"))
+    var (deg, degRdd) = Lineage.checkpointed(
       e.select(col("u").as("n")).unionAll(e.select(col("v").as("n")))
         .groupBy("n").agg(count(lit(1)).as("dg")))
     val rows = (1 to rounds).map { r =>
@@ -169,10 +171,10 @@ object KCore {
         .join(badV, Seq("v"), "left_anti")
         .groupBy(col("v").as("n")).agg(count(lit(1)).as("lc"))
       val lost = lostU.unionAll(lostV).groupBy("n").agg(sum("lc").as("lost"))
-      val (nextE, nextERdd) = Dedup.checkpointed(
+      val (nextE, nextERdd) = Lineage.checkpointed(
         e.join(badU, Seq("u"), "left_anti")
           .join(badV, Seq("v"), "left_anti").select("u", "v"))
-      val (nextDeg, nextDegRdd) = Dedup.checkpointed(
+      val (nextDeg, nextDegRdd) = Lineage.checkpointed(
         deg.join(bad, Seq("n"), "left_anti")
           .join(lost, Seq("n"), "left")
           .select(col("n"),
@@ -205,7 +207,7 @@ object KCore {
     * the call site for the same reason).
     */
   /** Peel-to-FIXPOINT membership variant (round-10: g17's ladder):
-    * same per-round shape and [[Dedup.checkpointed]] discipline as
+    * same per-round shape and [[Lineage.checkpointed]] discipline as
     * [[peelEdges]], but rounds run until a round finds no node below
     * k — the converged Seidman k-core, not an R-round truncation.
     * Convergence is what makes the decomposition ladder CHAINABLE:
@@ -219,67 +221,44 @@ object KCore {
     * diverging from an oracle that stopped unrolling.
     */
   def peelEdgesConverged(edges: DataFrame, k: Int, maxRounds: Int,
-      track: org.apache.spark.rdd.RDD[_] => Unit, batch: Int = 1,
+      track: org.apache.spark.rdd.RDD[_] => Unit,
       onRounds: Int => Unit = _ => ()): DataFrame = {
-    var (e, eRdd) = Dedup.checkpointed(edges.select("u", "v"))
+    var (e, eRdd) = Lineage.checkpointed(edges.select("u", "v"))
     // convergence = edge-count stability: every bad node is incident
-    // to ≥1 surviving edge (it appears in e), so an iteration with a
+    // to ≥1 surviving edge (it appears in e), so a round with a
     // non-empty bad set strictly shrinks the edge count — |next| ==
-    // |e| ⇔ every iteration since the last checkpoint removed nothing
-    // ⇔ fixpoint. Counting the ALREADY-MATERIALIZED checkpoint blocks
-    // costs ~nothing (a first cut that materialized the bad set
-    // separately to test it ran 2 jobs/round and measured 3× the
-    // pinned peel's wall-clock; a per-round bad.count() without
-    // materialization was 4×).
+    // |e| ⇔ the round removed nothing ⇔ fixpoint. Counting the
+    // ALREADY-MATERIALIZED checkpoint blocks costs ~nothing (a first
+    // cut that materialized the bad set separately to test it ran 2
+    // jobs/round and measured 3× the pinned peel's wall-clock; a
+    // per-round bad.count() without materialization was 4×).
     //
-    // batch = iterations per checkpoint, DEFAULT 1 — measured, twice:
-    // a round-11 per-round profile localized g17's peel cost to CASCADE
-    // DEPTH × ~0.2 s/round of fixed stage overhead (the frames are
-    // 1-partition, ≤3.5k edges — data is irrelevant), which made
-    // batching look like the lever. It is not: each un-checkpointed
-    // iteration references its predecessor 3× (two degree selects +
-    // the join input), so a batch re-executes earlier iterations'
-    // subtrees ~3^(batch−1) times, and since each subtree carries a
-    // SHUFFLE (the degree agg), batching multiplies exactly the
-    // per-stage scheduling cost it was meant to amortize. DevQueryAB
-    // warmed medians, g17's full ladder: batch=1 9.26 s / batch=2
-    // 13.47 s at sf0.01; batch=1 4.45 s / batch=2 5.48 s at sf0.1;
-    // an earlier batch=3 cut measured 14.7 s. The per-round checkpoint
-    // was never the cost — the floor is the Seidman cascade depth
-    // itself (22 rounds at sf0.01), each round irreducibly one
-    // degree-shuffle stage. Iterations past the fixpoint are exact
-    // no-ops, so any batch value yields the identical converged set
-    // (the parameter stays for future re-measurement on real clusters,
-    // where per-stage latency vs shuffle volume trade differently).
+    // One checkpoint per round, measured against several rounds per
+    // checkpoint: each un-checkpointed round references its
+    // predecessor 3× (two degree selects + the join input), so
+    // batching re-executes earlier rounds' degree shuffles ~3^(b−1)
+    // times. g17's full ladder, warmed medians: 1 round/checkpoint
+    // 9.26 s vs 2 rounds 13.47 s at sf0.01 (4.45 vs 5.48 s at sf0.1;
+    // 3 rounds 14.7 s). The floor is the Seidman cascade depth itself
+    // (22 rounds at sf0.01), each round one degree-shuffle stage.
     var nEdges = eRdd.count()
     var r = 0
     var converged = nEdges == 0L // an empty frame is its own fixpoint
     while (!converged) {
-      r += batch
-      val stepped = (1 to batch).foldLeft(e) { (cur, _) =>
-        val deg = cur.select(col("u").as("n"))
-          .unionAll(cur.select(col("v").as("n")))
-          .groupBy("n").agg(count(lit(1)).as("dg"))
-        val bad = deg.filter(col("dg") < k).select("n")
-        cur.join(bad.withColumnRenamed("n", "u"), Seq("u"), "left_anti")
+      r += 1
+      val deg = e.select(col("u").as("n"))
+        .unionAll(e.select(col("v").as("n")))
+        .groupBy("n").agg(count(lit(1)).as("dg"))
+      val bad = deg.filter(col("dg") < k).select("n")
+      val (next, nextRdd) = Lineage.checkpointed(
+        e.join(bad.withColumnRenamed("n", "u"), Seq("u"), "left_anti")
           .join(bad.withColumnRenamed("n", "v"), Seq("v"), "left_anti")
-          .select("u", "v")
-      }
-      val (next, nextRdd) = Dedup.checkpointed(stepped)
+          .select("u", "v"))
       val nNext = nextRdd.count()
       converged = nNext == nEdges
-      // loud-failure cap, batched form: a batch that still REMOVED
-      // edges must end at r ≤ maxRounds (so active depth is provably
-      // ≤ the mirror's unroll); only the fixpoint-PROOF batch (which
-      // removes nothing) may overhang past it. DELIBERATELY
-      // conservative under batch > 1: a change-batch ending past
-      // maxRounds fails even when the one active iteration inside it
-      // was ≤ maxRounds (the count can't tell which iteration
-      // removed), because the alternative — letting it pass — would
-      // admit depths the mirror's unroll does not replay and convert
-      // a loud failure into a silent hash divergence. Exact cap
-      // semantics need batch = 1 (the default); size maxRounds with
-      // batch−1 slack if ever benching batch > 1 near the cap.
+      // loud-failure cap: a round that still removed edges must be
+      // ≤ maxRounds, the mirror's unroll; only the fixpoint-proof
+      // round (which removes nothing) may land past it
       require(converged || r <= maxRounds,
         s"k=$k peel still active past $maxRounds rounds — raise the cap AND its SQL mirror unroll together")
       eRdd.unpersist(blocking = false)

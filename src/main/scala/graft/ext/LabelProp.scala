@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ops.Lineage
+
 /** Synchronous label propagation (Raghavan-style LPA) with pinned
   * rounds and a pinned tie rule — community detection as a curation
   * signal (near-duplicate *clusters* come from [[Dedup.connectedComponents]];
@@ -27,7 +29,7 @@ import org.apache.spark.sql.functions._
   * map-side-partial aggregations bounded by |candidate labels per
   * node| ≤ degree, and the label vector stays fully distributed (no
   * driver state — web-scale |nodes| safe). Each round's labels are
-  * localCheckpoint'd ([[Dedup.checkpointed]]) so lineage stays flat at
+  * localCheckpoint'd ([[Lineage.checkpointed]]) so lineage stays flat at
   * diameter-scale round counts, same discipline as the CC/k-core
   * loops.
   */
@@ -40,13 +42,13 @@ object LabelProp {
   def labels(edges: DataFrame, rounds: Int): DataFrame = {
     val nodes = edges.select(col("src").as("node")).distinct()
     // partitioned + sorted on the vote key before the cut
-    // ([[Dedup.checkpointedKeyed]]): every round's vote SortMergeJoin
+    // ([[Lineage.checkpointedKeyed]]): every round's vote SortMergeJoin
     // reuses the keyed leaf's layout instead of re-exchanging and
     // re-sorting |E|+|V| rows (guide §2.4)
-    val (ev, evRdd) = Dedup.checkpointedKeyed(
+    val (ev, evRdd) = Lineage.checkpointedKeyed(
       edges.select("src", "dst").unionAll(
         nodes.select(col("node").as("src"), col("node").as("dst"))), "src")
-    var (l, lRdd) = Dedup.checkpointed(nodes.withColumn("label", col("node")))
+    var (l, lRdd) = Lineage.checkpointed(nodes.withColumn("label", col("node")))
     for (_ <- 1 to rounds) {
       val counts = ev
         .join(l.withColumnRenamed("node", "src"), Seq("src"))
@@ -58,7 +60,7 @@ object LabelProp {
       val winner = counts.join(mx, Seq("node"))
         .filter(col("cnt") === col("mc"))
         .groupBy("node").agg(min("label").as("label"))
-      val (next, nextRdd) = Dedup.checkpointed(winner)
+      val (next, nextRdd) = Lineage.checkpointed(winner)
       lRdd.unpersist(blocking = false)
       l = next; lRdd = nextRdd
     }

@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Lineage
+
 /** Integer-exact PageRank with pinned rounds — link-graph centrality
   * as a curation prior (the RefinedWeb/CCNet-shaped signal: a page's
   * position in the link graph gates whether its text enters the
@@ -31,7 +33,7 @@ import org.apache.spark.sql.functions._
   * Rounds are pinned small (centrality gating uses the coarse
   * ordering, which stabilizes in a few rounds); at diameter-scale
   * round counts the lineage-cut discipline of
-  * [[Dedup.checkpointed]] applies unchanged.
+  * [[Lineage.checkpointed]] applies unchanged.
   */
 object PageRank {
 
@@ -51,11 +53,11 @@ object PageRank {
     // construction (g1: orders⋈lineitem DISTINCT) re-executes per
     // reference inside the single final action
     // partitioned + sorted on the contribution key before the cut
-    // ([[Dedup.checkpointedKeyed]]): the checkpoint leaf advertises
+    // ([[Lineage.checkpointedKeyed]]): the checkpoint leaf advertises
     // the layout, so every round's contribution SortMergeJoin and the
     // deg/nodes aggregations (all keyed on src) skip the edge-side
     // Exchange and Sort (rounds × (exchange+sort of E) → once)
-    val (e, _) = Dedup.checkpointedKeyed(edges.select("src", "dst"), "src")
+    val (e, _) = Lineage.checkpointedKeyed(edges.select("src", "dst"), "src")
     val deg = e.groupBy("src").agg(count(lit(1)).as("d"))
     val nodes = e.select(col("src").as("node")).distinct()
     var r = nodes.withColumn("rank", lit(Scale))
@@ -88,7 +90,7 @@ object PageRank {
   def personalizedRanks(edges: DataFrame, seedPred: Column,
       rounds: Int): DataFrame = {
     // same lineage cut + partition-once layout as [[ranks]]
-    val (e, _) = Dedup.checkpointedKeyed(edges.select("src", "dst"), "src")
+    val (e, _) = Lineage.checkpointedKeyed(edges.select("src", "dst"), "src")
     val deg = e.groupBy("src").agg(count(lit(1)).as("d"))
     val nodes = e.select(col("src").as("node")).distinct()
       .withColumn("seed", when(seedPred, lit(1L)).otherwise(lit(0L)))

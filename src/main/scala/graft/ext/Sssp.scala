@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ops.Lineage
+
 /** Truncated Bellman-Ford single-source shortest path — the min-plus
   * companion to [[PageRank]]'s sum-times semiring: the same
   * one-shuffle-per-round relational iteration, with (+, ×) swapped
@@ -18,7 +20,7 @@ import org.apache.spark.sql.functions._
   * exchange). The distance vector stays fully distributed — no
   * driver state — and all arithmetic is exact longs: integer weights
   * in, integer path costs out, no float accumulation anywhere.
-  * Lineage: one [[Dedup.checkpointed]] cut on the (usually
+  * Lineage: one [[Lineage.checkpointed]] cut on the (usually
   * join-derived) edge input, which every round re-references, plus
   * the per-round re-cut discipline of [[KCore]] on the distance
   * vector itself — each round references the previous vector twice
@@ -38,11 +40,11 @@ object Sssp {
   def distances(edges: DataFrame, seed: DataFrame, rounds: Int,
       track: org.apache.spark.rdd.RDD[_] => Unit = _ => ()): DataFrame = {
     // partition + sort by the relax key once, before the lineage cut
-    // ([[Dedup.checkpointedKeyed]]): the keyed leaf advertises the
+    // ([[Lineage.checkpointedKeyed]]): the keyed leaf advertises the
     // layout, so every round's relax SortMergeJoin skips the
     // edge-side Exchange and Sort (rounds × (exchange+sort of E) →
     // once; the Stress/Triangles discipline, guide §2.4)
-    val (e, eRdd) = Dedup.checkpointedKeyed(edges.select("u", "v", "w"), "u")
+    val (e, eRdd) = Lineage.checkpointedKeyed(edges.select("u", "v", "w"), "u")
     var d = seed.select(col("node"), col("dist"))
     // per-round lineage cut (the KCore discipline): without it the
     // distance frame references itself twice per round (relax +
@@ -55,7 +57,7 @@ object Sssp {
       val relax = e
         .join(d.withColumnRenamed("node", "u"), Seq("u"))
         .select(col("v").as("node"), (col("dist") + col("w")).as("dist"))
-      val (next, nextRdd) = Dedup.checkpointed(
+      val (next, nextRdd) = Lineage.checkpointed(
         d.unionAll(relax).groupBy("node").agg(min("dist").as("dist")))
       dRdd.foreach(_.unpersist(blocking = false))
       d = next

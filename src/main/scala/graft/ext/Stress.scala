@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ops.Lineage
+
 /** Multi-seed level-synchronized BFS with EXACT shortest-path counts
   * (σ) — the integer core of Brandes-style centrality, pivot-sampled
   * the Brandes–Pich way (a pinned handful of seeds instead of all
@@ -20,7 +22,7 @@ import org.apache.spark.sql.functions._
   *
   * Spark shape per round: one frontier-join shuffle on the edge key +
   * one (seed, node) agg; the path table stays fully distributed,
-  * bounded by |seeds|·|V| rows. Lineage: [[Dedup.checkpointed]] on
+  * bounded by |seeds|·|V| rows. Lineage: [[Lineage.checkpointed]] on
   * the (join-derived) edge input and the per-round re-cut discipline
   * of [[KCore]] on the path table — each round references it twice
   * (frontier + anti-join), so an uncut plan doubles per round.
@@ -35,12 +37,12 @@ object Stress {
   def sigmaTable(edges: DataFrame, seeds: DataFrame, rounds: Int,
       track: org.apache.spark.rdd.RDD[_] => Unit = _ => ()): DataFrame = {
     // partition + sort the edge table by the probe key ONCE, before
-    // the lineage cut ([[Dedup.checkpointedKeyed]]): the keyed leaf
+    // the lineage cut ([[Lineage.checkpointedKeyed]]): the keyed leaf
     // advertises hashpartitioning(src)+ordering, so each round's
     // frontier SortMergeJoin reuses the layout instead of re-exchanging
     // and re-sorting |E| every round (guide §2.4 — establish the
     // partitioning once; rounds × (exchange+sort of E) → once)
-    val (e, eRdd) = Dedup.checkpointedKeyed(edges.select("src", "dst"), "src")
+    val (e, eRdd) = Lineage.checkpointedKeyed(edges.select("src", "dst"), "src")
     var p = seeds.select(col("seed"), col("seed").as("node"),
       lit(0L).as("d"), lit(1L).as("sigma"))
     var pRdd: Option[org.apache.spark.rdd.RDD[_]] = None
@@ -53,7 +55,7 @@ object Stress {
           lit(r.toLong).as("d"), col("sigma"))
       val fresh = f.join(p.select("seed", "node"),
         Seq("seed", "node"), "left_anti")
-      val (next, nextRdd) = Dedup.checkpointed(p.unionAll(fresh))
+      val (next, nextRdd) = Lineage.checkpointed(p.unionAll(fresh))
       pRdd.foreach(_.unpersist(blocking = false))
       p = next
       pRdd = Some(nextRdd)

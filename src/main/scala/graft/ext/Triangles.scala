@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ops.Lineage
+
 /** Triangle census over an undirected simple graph — the local
   * clustering signal (a node's triangle count is the numerator of
   * its clustering coefficient; graph-shaped corpus curation uses it
@@ -57,7 +59,7 @@ object Triangles {
     * fused ≡ wedge on random graphs).
     */
   def perNode(edges: DataFrame): DataFrame = {
-    val (e, _) = Dedup.checkpointed(edges.select("u", "v"))
+    val (e, _) = Lineage.checkpointed(edges.select("u", "v"))
     val deg = e.select(col("u").as("n"))
       .unionAll(e.select(col("v").as("n")))
       .groupBy("n").agg(count(lit(1)).as("deg"))
@@ -65,7 +67,7 @@ object Triangles {
       (col("du") === col("dv") && col("u") < col("v"))
     // keyed on src: the adjacency group-by and the A_x attach both
     // run partition-local on the stored layout (guide §2.4)
-    val (oriented, _) = Dedup.checkpointedKeyed(e
+    val (oriented, _) = Lineage.checkpointedKeyed(e
       .join(deg.select(col("n").as("u"), col("deg").as("du")), Seq("u"))
       .join(deg.select(col("n").as("v"), col("deg").as("dv")), Seq("v"))
       .select(

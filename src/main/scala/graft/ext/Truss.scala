@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.ops.Lineage
+
 /** k-truss peel with pinned rounds — EDGE-level cohesion, one rung
   * above [[KCore]]'s node-level degeneracy: repeatedly delete every
   * edge whose triangle support (common-neighbor count) is below
@@ -17,7 +19,7 @@ import org.apache.spark.sql.functions._
   * Cross-engine exact by the [[KCore]] recipe verbatim: rounds are
   * PINNED, every quantity an exact long count, DuckDB replays the
   * identical peel as an unrolled CTE ([[Sql.rounds]]). Iteration
-  * discipline is [[Dedup.checkpointed]] per round (each round
+  * discipline is [[Lineage.checkpointed]] per round (each round
   * references the previous edge set four times — symmetric closure
   * twice, the support join's probe, the keep-filter join; inlined
   * that is the same exponential-plan trap KCore measured), with
@@ -45,7 +47,7 @@ object Truss {
     * R-row frame.
     */
   def peelStats(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    var (e, eRdd) = Dedup.checkpointed(edges.select("u", "v"))
+    var (e, eRdd) = Lineage.checkpointed(edges.select("u", "v"))
     val rows = (1 to rounds).map { r =>
       val nEdgesPrev = e.count()
       val sym = e.select(col("u").as("s"), col("v").as("t"))
@@ -54,7 +56,7 @@ object Truss {
         .join(sym.select(col("s").as("u"), col("t").as("w")), Seq("u"))
         .join(sym.select(col("s").as("v"), col("t").as("w")), Seq("v", "w"))
         .groupBy("u", "v").agg(count(lit(1)).as("sup"))
-      val (next, nextRdd) = Dedup.checkpointed(
+      val (next, nextRdd) = Lineage.checkpointed(
         e.join(sup, Seq("u", "v"), "left")
           .filter(coalesce(col("sup"), lit(0L)) >= (k - 2).toLong)
           .select("u", "v"))

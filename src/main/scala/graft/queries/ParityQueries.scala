@@ -1088,7 +1088,7 @@ object ParityQueries {
         for (r <- 1 to 3) {
           val prop = reg.join(edges, col("v") === col("src"))
             .select(col("dst").as("v"), col("arr"))
-          val (next, nextRdd) = graft.ext.Dedup.checkpointed(
+          val (next, nextRdd) = graft.ops.Lineage.checkpointed(
             reg.unionAll(prop).groupBy("v").agg(regMax.head, regMax.tail: _*)
               .select(col("v"), packed.as("arr")))
           tracked.track(nextRdd)
@@ -5634,11 +5634,11 @@ object ParityQueries {
           when(col("node") < 10L, col("node"))
             .otherwise(call_function("div", col("node"), lit(10L))).as("anc"),
           when(col("node") < 10L, lit(0L)).otherwise(lit(1L)).as("d"))
-        var (st, stRdd) = graft.ext.Dedup.checkpointed(st0)
+        var (st, stRdd) = graft.ops.Lineage.checkpointed(st0)
         for (_ <- 1 to 3) {
           val m = st.select(col("node").as("anc"), col("anc").as("anc2"),
             col("d").as("d2"))
-          val (next, nextRdd) = graft.ext.Dedup.checkpointed(
+          val (next, nextRdd) = graft.ops.Lineage.checkpointed(
             st.join(m, Seq("anc"))
               .select(col("node"), col("anc2").as("anc"),
                 (col("d") + col("d2")).as("d")))

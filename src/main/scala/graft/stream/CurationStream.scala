@@ -1,126 +1,115 @@
 package graft.stream
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.ext.Dedup
+import graft.ops.Lineage
 
 /** Fused streaming curation: ONE foreachBatch maintains BOTH the IVF
   * postings (the [[IvfServer]] serving index) and the dup-cluster
-  * standing state ([[DedupClusterStream]]) from ONE scan of each
-  * arrival batch — the round-14 verdict ask 5 composition (ingest →
-  * dedup → index with no triple read), and the 100 TB operating shape:
-  * a crawl lands once, and the same assignment pass that files each
-  * vector into its posting cell also produces the duplicate evidence.
+  * state ([[DedupClusterStream]]) from ONE scan of each arrival batch
+  * — a crawl lands once, and the pass that files each vector into its
+  * posting cell also produces the duplicate evidence.
   *
-  * The fusion is not just shared IO — the INDEX IS THE BLOCKING
-  * STRUCTURE: duplicate candidates are generated by joining arrivals
-  * to standing postings on the IVF `cell` the arrivals were just
-  * assigned to. For exact duplicates this blocking is COMPLETE by
-  * construction (cell assignment is a deterministic function of the
-  * embedding, so identical vectors always co-cell — the sim22b
-  * LSH-completeness argument, here a one-line theorem), which is what
-  * makes the stream ≡ batch twin exact. Near-dup generalizes by
-  * adding banding keys next to `cell`; the fold shape is unchanged.
+  * The INDEX IS THE BLOCKING STRUCTURE: duplicate candidates join
+  * arrivals to standing postings on the IVF `cell` the arrivals were
+  * just assigned to. For exact duplicates this blocking is COMPLETE
+  * (cell assignment is a deterministic function of the embedding, so
+  * identical vectors always co-cell), which makes the stream ≡ batch
+  * twin exact. Near-dup ([[NearDupCurationStream]]) blocks on banding
+  * keys instead; the fold shape is the same.
   *
-  * Per batch, from the single assigned-arrivals frame:
-  *  1. intra-batch edges: equal-embedding pairs within the batch
-  *     (a < b), blocked by cell;
-  *  2. cross edges: arrival × standing postings, same cell, equal
-  *     embedding — every duplicate pair (earlier, later) is emitted
-  *     exactly once, when the later one arrives;
-  *  3. the dup-cluster fold ([[DedupClusterStream.Maintainer]] —
-  *     star contraction + converge-or-throw CC) absorbs the edges;
-  *  4. the postings append: standing ∪ assigned-arrivals, re-rooted
-  *     on a fresh leaf per batch (the stats-compounding discipline —
-  *     an iterated union would otherwise both deepen the plan and
-  *     multiply inherited size stats).
-  *
-  * Cost per batch is O(|batch| + |candidate pairs| + Δ-connected
-  * state) — the standing cluster majority is untouched (the
-  * DedupClusterStream argument), and unmoved postings are never
-  * rewritten (the IvfHotSwap argument). Twin proof:
-  * CurationStreamSpec shows, for ANY batching, postings ≡ one batch
-  * `assignCorpus` over the full corpus and clusters ≡ one batch
+  * Per batch, from the single assigned-arrivals frame: equal-embedding
+  * pairs within the batch (a < b) and against the standing postings,
+  * so every duplicate pair is emitted exactly once, when the later one
+  * arrives; the dup-cluster fold absorbs those edges; the postings
+  * append the arrivals. Cost is O(|batch| + |candidate pairs| +
+  * Δ-connected state). CurationStreamSpec shows, for ANY batching,
+  * postings ≡ one batch `assignCorpus` and clusters ≡ one batch
   * `connectedComponents` over all equal-embedding pairs.
   */
 object CurationStream {
 
-  /** Equal-embedding duplicate edges between `newly` (assigned
-    * arrivals) and `standing` postings plus within `newly` itself,
-    * blocked on the shared IVF cell. Returns (src, dst) vec_id pairs.
+  /** Candidate pairs for the arrivals `newly`, joined on equal `keys`
+    * within the batch once per unordered pair (x.id < y.id) and against
+    * the standing store (x.id ≠ y.id), so every pair of rows is
+    * examined by exactly one side; `edges` maps each joined side
+    * (x, y) to (src, dst) edges.
     */
-  private[stream] def dupEdges(newly: DataFrame, standing: Option[DataFrame]): DataFrame = {
-    val intra = newly.as("x").join(newly.as("y"),
-        col("x.cell") === col("y.cell") &&
-          col("x.vec_id") < col("y.vec_id") &&
-          col("x.embedding") === col("y.embedding"))
-      .select(col("x.vec_id").as("src"), col("y.vec_id").as("dst"))
-    standing match {
-      case None => intra
-      case Some(st) =>
-        val cross = newly.as("x").join(st.as("y"),
-            col("x.cell") === col("y.cell") &&
-              col("x.vec_id") =!= col("y.vec_id") &&
-              col("x.embedding") === col("y.embedding"))
-          .select(col("x.vec_id").as("src"), col("y.vec_id").as("dst"))
-        intra.unionAll(cross)
+  private[stream] def blockedPairs(newly: DataFrame, standing: Option[DataFrame],
+      id: String, keys: Seq[String])(edges: DataFrame => DataFrame): DataFrame = {
+    def side(other: DataFrame, order: (Column, Column) => Column) = edges(
+      newly.as("x").join(other.as("y"),
+        keys.map(k => col(s"x.$k") === col(s"y.$k")).reduce(_ && _) &&
+          order(col(s"x.$id"), col(s"y.$id"))))
+    (side(newly, _ < _) +: standing.map(side(_, _ =!= _)).toSeq).reduce(_ unionAll _)
+  }
+
+  /** Equal-embedding duplicate edges, blocked on the shared IVF cell. */
+  private[stream] def dupEdges(newly: DataFrame, standing: Option[DataFrame]): DataFrame =
+    blockedPairs(newly, standing, "vec_id", Seq("cell", "embedding"))(
+      _.select(col("x.vec_id").as("src"), col("y.vec_id").as("dst")))
+
+  /** The fused-curation body both curation maintainers share: ONE
+    * scan of each arrival batch feeds the duplicate-edge derivation AND
+    * the store append. `scan` maps a raw batch to the rows the store
+    * keeps; `edges(arrivals, store)` returns (src, dst) duplicate edges
+    * within the cut arrivals and between them and the standing store
+    * (None before the first batch).
+    *
+    * Two folds, one lock: the cluster fold runs first (its edges read
+    * the store as it stood before this batch), then the store append.
+    * Each fold guards its own epoch, so a failure between the two
+    * replays as the store append alone.
+    */
+  class Fused(val scan: DataFrame => DataFrame,
+      val edges: (DataFrame, Option[DataFrame]) => DataFrame)
+      extends Serializable {
+
+    private val dedup = new DedupClusterStream.Maintainer("src", "dst")
+    private val appended = new StandingFold({
+      case (Some(st), arrivals) => st.unionAll(arrivals)
+      case (None, arrivals)     => arrivals
+    })
+
+    /** The foreachBatch body; a replayed `batchId` is a no-op. */
+    def ingest(batch: DataFrame, batchId: Long): Unit = appended.locked {
+      if (!appended.applied(batchId)) {
+        // the ONE scan, cut so the edge joins and the append both read
+        // the same blocks
+        val (arrivals, arrivalsRdd) = Lineage.checkpointed(scan(batch))
+        try {
+          dedup.merge(edges(arrivals, appended.current), batchId)
+          appended.advance(batchId, arrivals)
+        } finally arrivalsRdd.unpersist(blocking = false)
+      }
+    }
+
+    /** Current standing store; [[StandingFold]] frame lifetime. */
+    def store: Option[DataFrame] = appended.current
+
+    /** Current (node → component) duplicate-cluster assignment. */
+    def clusters: Option[DataFrame] = dedup.assignments
+
+    def release(): Unit = appended.locked {
+      appended.release()
+      dedup.release()
     }
   }
 
   /** In-session fused standing store. `centroids` is the serving
     * geometry ([[graft.ext.IvfModel]] in production; specs pass a
-    * hand geometry). Frame lifetime matches the other Maintainers:
-    * frames returned by [[postings]]/[[clusters]] are invalidated by
-    * the next [[ingest]]/[[release]].
+    * hand geometry).
     */
-  final class Maintainer(centroids: Seq[Array[Double]]) extends Serializable {
-
-    private val dedup = new DedupClusterStream.Maintainer("src", "dst")
-    @volatile private var standing: Option[DataFrame] = None
-    @volatile private var handle: Option[org.apache.spark.rdd.RDD[_]] = None
-
-    /** The foreachBatch body: one assignment scan of the batch feeds
-      * the dup-edge derivation AND the postings append.
-      */
-    def ingest(batch: DataFrame, batchId: Long): Unit = synchronized {
-      if (!batch.isEmpty) {
-        // the ONE scan: arrivals get their posting cell; persist so the
-        // edge joins and the postings append both read the same blocks
-        val (ab, abRdd) = Dedup.checkpointed(
-          StreamingAnn.assignCorpus(
-            batch.select(col("vec_id").cast("long").as("vec_id"),
-              col("embedding")), centroids))
-        // (a) duplicate evidence, blocked by the index's own cell
-        dedup.merge(dupEdges(ab, standing), batchId)
-        // (b) postings append; fresh-leaf re-root per batch (stats
-        // compounding — see DedupClusterStream.Maintainer.merge)
-        val next = standing match {
-          case Some(st) => st.unionAll(ab)
-          case None     => ab
-        }
-        val (cut0, rdd) = Dedup.checkpointed(next)
-        val cut = next.sparkSession.createDataFrame(cut0.rdd, cut0.schema)
-        handle.foreach(_.unpersist(blocking = false))
-        standing = Some(cut)
-        handle = Some(rdd)
-        abRdd.unpersist(blocking = false)
-      }
-    }
+  final class Maintainer(centroids: Seq[Array[Double]]) extends Fused(
+      batch => StreamingAnn.assignCorpus(
+        batch.select(col("vec_id").cast("long").as("vec_id"),
+          col("embedding")), centroids),
+      dupEdges) {
 
     /** Current servable postings (vec_id, embedding, cell) — feed to
       * [[StreamingAnn.scoreIvf]] exactly like an [[IvfServer]] index.
       */
-    def postings: Option[DataFrame] = standing
-
-    /** Current (node → component) duplicate-cluster assignment. */
-    def clusters: Option[DataFrame] = dedup.assignments
-
-    def release(): Unit = synchronized {
-      handle.foreach(_.unpersist(blocking = false))
-      handle = None
-      standing = None
-      dedup.release()
-    }
+    def postings: Option[DataFrame] = store
   }
 }

@@ -6,45 +6,30 @@ import org.apache.spark.sql.functions._
 import graft.ext.Dedup
 
 /** Streaming maintenance of the near-dup CLUSTER state — the
-  * foreachBatch operational form of the batch `dedup_components`
-  * connected-components op (round-13 verdict ask 5's named depth
-  * item; the [[Scd2Stream]] twin pattern applied to the dedup
-  * pipeline's entity layer).
+  * foreachBatch form of the batch `dedup_components` op.
   *
-  * Why dup clusters are incrementally maintainable: the standing
-  * state is the (node → component) assignment with the component id
-  * the MINIMUM member node (exactly [[Dedup.connectedComponents]]'
-  * min-label fixpoint), and star contraction preserves connectivity —
-  * a component {n₁ < n₂ < …} is connectivity-equivalent to its star
-  * edges {(nᵢ, n₁)}. So one micro-batch of new similarity edges folds
-  * in as
+  * The standing state is the (node → component) assignment with the
+  * component id the MINIMUM member node (exactly
+  * [[Dedup.connectedComponents]]' min-label fixpoint), and star
+  * contraction preserves connectivity — a component {n₁ < n₂ < …} is
+  * connectivity-equivalent to its star edges {(nᵢ, n₁)}. So one
+  * micro-batch of new similarity edges folds in as
   *
   *   standing' = untouched(standing)
   *             ∪ CC(star(touched(standing)) ∪ batchEdges)
   *
   * where touched = components holding ANY endpoint of the batch.
-  * Untouched components carry their rows forward byte-identical (no
-  * recompute, no shuffle of the unaffected cluster majority); touched
-  * components re-merge from their own star edges plus the new edges
-  * only — including the cross-cluster case where a batch edge BRIDGES
-  * two standing components into one (the new representative is the
-  * global min, exactly as a full rebuild would assign).
+  * Untouched components carry their rows forward byte-identical;
+  * touched components re-merge from their own star edges plus the new
+  * edges only — including a batch edge that BRIDGES two standing
+  * components (the new representative is the global min, exactly as
+  * a full rebuild would assign).
   *
-  * Contract: edges are insert-only (near-dup evidence only
-  * accumulates — the batch pipeline has no edge deletion either);
-  * nodes appear in the state only once they occur on an edge
-  * (singleton docs are not tracked, matching dedup_components).
+  * Contract: edges are insert-only; nodes appear in the state only
+  * once they occur on an edge (matching dedup_components).
   *
   * 100 TB shape: per batch the fold shuffles |touched assignments| +
-  * |batch edges| on uniform node keys, never |all clusters| — daily
-  * cost is O(Δ-connected state), and the standing table is bounded by
-  * |non-singleton docs|. In production the standing set is a keyed
-  * table and this fold is a MERGE over touched components;
-  * [[Maintainer]] realizes it in-session for the stream ≡ batch
-  * proof, cutting lineage per batch (localCheckpoint — the
-  * LabelProp/CC loop discipline) so plan depth stays constant at any
-  * stream length. Recovery is the sink's: the standing assignment IS
-  * the state (restart resumes from the last committed assignment).
+  * |batch edges| on uniform node keys, never |all clusters|.
   */
 object DedupClusterStream {
 
@@ -52,14 +37,10 @@ object DedupClusterStream {
     * member; `batch` carries new undirected similarity edges
     * (srcCol, dstCol). Returns the next (node, comp) standing set.
     *
-    * The comp = min-member invariant this fold's star contraction
-    * builds on is GUARANTEED by [[Dedup.connectedComponents]]: since
-    * round 15 it throws instead of returning partial labels when a
-    * batch's merge graph is deeper than maxIter can flood (round-14
-    * advice — an unconverged assignment would corrupt the standing
-    * state permanently and compound across batches), and its
-    * pointer-jump shortcut makes the bound O(log diameter), so a
-    * legitimately deep first batch converges instead of throwing.
+    * The comp = min-member invariant the star contraction builds on
+    * is GUARANTEED by [[Dedup.connectedComponents]]: it throws rather
+    * than return partial labels, which would corrupt the standing
+    * state permanently.
     */
   def mergeBatch(standing: DataFrame, batch: DataFrame,
       srcCol: String, dstCol: String): DataFrame = {
@@ -82,62 +63,27 @@ object DedupClusterStream {
   }
 
   /** In-session standing store for the foreachBatch sink: folds each
-    * micro-batch of edges with [[mergeBatch]] and localCheckpoints
-    * the result so lineage stays flat across batches.
-    *
-    * Frame lifetime (the [[Scd2Stream.Maintainer]] contract): a frame
-    * returned by [[assignments]] is backed by the localCheckpoint RDD
-    * that the NEXT merge()/release() unpersists — execute it within
-    * the current micro-batch or snapshot it first.
+    * micro-batch of edges with [[mergeBatch]] on a [[StandingFold]];
+    * [[assignments]] follows its frame lifetime.
     */
   final class Maintainer(srcCol: String, dstCol: String)
       extends Serializable {
 
-    @volatile private var standing: Option[DataFrame] = None
-    @volatile private var handle: Option[org.apache.spark.rdd.RDD[_]] = None
+    private val fold = new StandingFold({
+      case (Some(st), batch) => mergeBatch(st, batch, srcCol, dstCol)
+      case (None, batch) =>
+        Dedup.connectedComponents(
+          batch.select(col(srcCol).cast("long").as("a"),
+            col(dstCol).cast("long").as("b")), "a", "b")
+          .select("node", "comp")
+    })
 
-    /** The foreachBatch body.
-      *
-      * The standing frame is re-rooted on a FRESH leaf (createDataFrame
-      * over the checkpointed rows) each batch, not just localCheckpointed:
-      * localCheckpoint preserves the source plan's COMPUTED statistics,
-      * and one fold batch runs ~20 CC join rounds whose size estimates
-      * MULTIPLY — inherited stats therefore grow ~20× in bit-length per
-      * micro-batch, and by batch ~6 Catalyst's size-only stats visitor
-      * is multiplying million-digit BigIntegers on the driver (measured:
-      * an edge-at-a-time stream spent 18 CPU-minutes inside
-      * BigInteger.multiplyToomCook3 before this fix). A fresh leaf
-      * restarts every batch from the constant default size estimate, so
-      * planning cost stays flat at any stream length — the stats-side
-      * twin of the lineage cut.
-      */
-    def merge(batch: DataFrame, batchId: Long): Unit = synchronized {
-      if (!batch.isEmpty) {
-        val next = standing match {
-          case Some(st) => mergeBatch(st, batch, srcCol, dstCol)
-          case None =>
-            Dedup.connectedComponents(
-              batch.select(col(srcCol).cast("long").as("a"),
-                col(dstCol).cast("long").as("b")), "a", "b")
-              .select("node", "comp")
-        }
-        val (cut0, rdd) = Dedup.checkpointed(next)
-        val cut = next.sparkSession.createDataFrame(cut0.rdd, cut0.schema)
-        handle.foreach(_.unpersist(blocking = false))
-        standing = Some(cut)
-        handle = Some(rdd)
-      }
-    }
+    /** The foreachBatch body; a replayed `batchId` is a no-op. */
+    def merge(batch: DataFrame, batchId: Long): Unit = fold.advance(batchId, batch)
 
-    /** Current (node, comp) assignment — empty before the first batch;
-      * invalidated by the next merge()/release().
-      */
-    def assignments: Option[DataFrame] = standing
+    /** Current (node, comp) assignment — empty before the first batch. */
+    def assignments: Option[DataFrame] = fold.current
 
-    def release(): Unit = synchronized {
-      handle.foreach(_.unpersist(blocking = false))
-      handle = None
-      standing = None
-    }
+    def release(): Unit = fold.release()
   }
 }

@@ -3,39 +3,29 @@ package graft.stream
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ext.{Dedup, NearDup, TextAnalysis}
+import graft.ext.{NearDup, TextAnalysis}
 
-/** NEAR-dup generalization of [[CurationStream]] (the fold shape that
-  * file documents as "near-dup generalizes by adding banding keys
-  * beside `cell`", realized): ONE foreachBatch maintains the standing
-  * banded-MinHash signature store AND the dup-cluster assignment from
-  * ONE signature scan of each document arrival batch. This is the
-  * actual 100 TB dedup operating mode — exact duplicates are the easy
-  * 10%; boilerplate and re-crawls are near-duplicates, and the
-  * banding index IS the standing structure that both blocks candidate
-  * generation and answers "what does this look like" lookups.
+/** NEAR-dup generalization of [[CurationStream]]: ONE foreachBatch
+  * maintains the standing banded-MinHash signature store AND the
+  * dup-cluster assignment from ONE signature scan of each document
+  * arrival batch. Boilerplate and re-crawls are near-duplicates, and
+  * the banding index both blocks candidate generation and answers
+  * "what does this look like" lookups.
   *
-  * Blocking = the repo's one banding scheme (dedup_minhash_pairs /
-  * DedupQueries.minhashCandidates: k-permutation MinHash over 3-token
-  * shingle hash sets, bands of r = 2 rows keyed (band, h1, h2), empty
-  * sets band to null = no candidates), so the streaming store is
-  * byte-compatible with the batch pipeline's. Candidates sharing ≥ 1
-  * band are re-ranked by EXACT Jaccard on the bound hash sets —
-  * candidates only, never all pairs.
+  * Blocking = the repo's one banding scheme (dedup_minhash_pairs:
+  * k-permutation MinHash over 3-token shingle hash sets, bands of
+  * r = 2 rows keyed (band, h1, h2), empty sets band to null = no
+  * candidates), so the streaming store is byte-compatible with the
+  * batch pipeline's. Candidates sharing ≥ 1 band are re-ranked by
+  * EXACT Jaccard on the bound hash sets.
   *
-  * The stream ≡ batch twin is EXACT even though banding itself is
-  * approximate: both arms use the identical band criterion and the
-  * identical Jaccard re-rank, and every unordered pair is examined by
-  * exactly one side — intra-batch (id-ordered) when the two docs
-  * arrive together, arrival × standing when they don't. So the edge
-  * SETS agree, hence the components agree
-  * (NearDupCurationStreamSpec, fixed + random batchings).
-  *
-  * Per batch the fold shuffles |batch signatures| + |band-key
-  * matches| + |Δ-connected state| — the standing store is touched by
-  * key lookup only (at scale: a bucketed table on the band key), and
-  * untouched clusters pass through the [[DedupClusterStream]] fold
-  * byte-identical.
+  * The stream ≡ batch twin is EXACT even though banding is
+  * approximate: both arms use the identical band criterion and
+  * re-rank, and every unordered pair is examined by exactly one side —
+  * intra-batch when the two docs arrive together, arrival × standing
+  * when they don't (NearDupCurationStreamSpec). Per batch the fold
+  * shuffles |batch signatures| + |band-key matches| + |Δ-connected
+  * state|; the standing store is touched by key lookup only.
   */
 object NearDupCurationStream {
 
@@ -62,79 +52,27 @@ object NearDupCurationStream {
         col("tb.h1").as("h1"), col("tb.h2").as("h2"), col("hs"))
   }
 
-  /** Near-dup edges between `newly` (this batch's signature rows) and
-    * the standing store plus within `newly`: band-key candidates,
-    * distinct pairs, exact-Jaccard ≥ threshold. Returns (src, dst).
+  /** Near-dup edges: band-key candidates, distinct pairs,
+    * exact-Jaccard ≥ threshold. Returns (src, dst).
     */
   private[stream] def dupEdges(newly: DataFrame, standing: Option[DataFrame],
-      jacThreshold: Double): DataFrame = {
-    val bandKey = Seq("band", "h1", "h2")
-    def score(pairs: DataFrame): DataFrame = pairs
-      .select(col("src"), col("dst"), col("hsa"), col("hsb"))
-      .distinct() // a pair may collide in several bands — score once
-      .filter(round(NearDup.jaccard(col("hsa"), col("hsb")), 6)
-        >= jacThreshold)
-      .select("src", "dst")
-    val intra = score(newly.as("x").join(newly.as("y"),
-        bandKey.map(k => col(s"x.$k") === col(s"y.$k")).reduce(_ && _) &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("src"), col("y.doc_id").as("dst"),
-        col("x.hs").as("hsa"), col("y.hs").as("hsb")))
-    standing match {
-      case None => intra
-      case Some(st) =>
-        intra.unionAll(score(newly.as("x").join(st.as("y"),
-            bandKey.map(k => col(s"x.$k") === col(s"y.$k")).reduce(_ && _) &&
-              col("x.doc_id") =!= col("y.doc_id"))
-          .select(col("x.doc_id").as("src"), col("y.doc_id").as("dst"),
-            col("x.hs").as("hsa"), col("y.hs").as("hsb"))))
-    }
-  }
+      jacThreshold: Double): DataFrame =
+    CurationStream.blockedPairs(newly, standing, "doc_id", Seq("band", "h1", "h2"))(
+      _.select(col("x.doc_id").as("src"), col("y.doc_id").as("dst"),
+          col("x.hs").as("hsa"), col("y.hs").as("hsb"))
+        .distinct() // a pair may collide in several bands — score once
+        .filter(round(NearDup.jaccard(col("hsa"), col("hsb")), 6) >= jacThreshold)
+        .select("src", "dst"))
 
-  /** In-session fused standing store; same lifetime contract as
-    * [[CurationStream.Maintainer]].
-    */
+  /** In-session fused standing store on [[CurationStream.Fused]]. */
   final class Maintainer(jacThreshold: Double, minhashK: Int = 16,
-      shingleK: Int = 3) extends Serializable {
-
-    private val dedup = new DedupClusterStream.Maintainer("src", "dst")
-    @volatile private var standing: Option[DataFrame] = None
-    @volatile private var handle: Option[org.apache.spark.rdd.RDD[_]] = None
-
-    /** The foreachBatch body: one signature scan feeds candidate
-      * generation AND the store append.
-      */
-    def ingest(batch: DataFrame, batchId: Long): Unit = synchronized {
-      if (!batch.isEmpty) {
-        val (ab, abRdd) = Dedup.checkpointed(
-          signatures(batch, minhashK, shingleK))
-        dedup.merge(dupEdges(ab, standing, jacThreshold), batchId)
-        val next = standing match {
-          case Some(st) => st.unionAll(ab)
-          case None     => ab
-        }
-        val (cut0, rdd) = Dedup.checkpointed(next)
-        val cut = next.sparkSession.createDataFrame(cut0.rdd, cut0.schema)
-        handle.foreach(_.unpersist(blocking = false))
-        standing = Some(cut)
-        handle = Some(rdd)
-        abRdd.unpersist(blocking = false)
-      }
-    }
+      shingleK: Int = 3) extends CurationStream.Fused(
+      signatures(_, minhashK, shingleK),
+      dupEdges(_, _, jacThreshold)) {
 
     /** Current standing signature store (doc_id, band, h1, h2, hs) —
       * the banding index a lookup path probes by band key.
       */
-    def bandIndex: Option[DataFrame] = standing
-
-    /** Current (node → component) near-dup cluster assignment. */
-    def clusters: Option[DataFrame] = dedup.assignments
-
-    def release(): Unit = synchronized {
-      handle.foreach(_.unpersist(blocking = false))
-      handle = None
-      standing = None
-      dedup.release()
-    }
+    def bandIndex: Option[DataFrame] = store
   }
 }

@@ -24,7 +24,7 @@ object Bridge {
     * coalescing, so plain `hashpartitioning(key, n)` holds exactly)
     * and sorted by `sortWithinPartitions(key)` immediately before the
     * checkpoint; the checkpoint copies partitions 1:1. That contract
-    * lives in ONE place — [[graft.ext.Dedup.checkpointedKeyed]] — and
+    * lives in ONE place — [[graft.ops.Lineage.checkpointedKeyed]] — and
     * this helper is not used anywhere else.
     */
   def keyedCheckpointLeaf(df: DataFrame, key: String): DataFrame = {

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.ext.{Dedup, Pq, Similarity}
+import graft.ext.{Pq, Similarity}
+import graft.ops.Lineage
 
 /** Built-ins-only reference forms of native or fused operators. The
   * query path never calls them; the specs check the fast forms
@@ -24,20 +25,20 @@ object ReferenceForms {
     // (measured: g2 23.0 → 4.4 s at sf0.1). Same for `oriented`,
     // referenced three times (two wedge legs + closing edge). Blocks
     // are reclaimed by the ContextCleaner when the plan is dropped.
-    val (e, _) = Dedup.checkpointed(edges.select("u", "v"))
+    val (e, _) = Lineage.checkpointed(edges.select("u", "v"))
     val deg = e.select(col("u").as("n"))
       .unionAll(e.select(col("v").as("n")))
       .groupBy("n").agg(count(lit(1)).as("deg"))
     val fwd = col("du") < col("dv") ||
       (col("du") === col("dv") && col("u") < col("v"))
     // partitioned + sorted on the wedge key before the lineage cut
-    // ([[Dedup.checkpointedKeyed]]): the keyed leaf advertises the
+    // ([[Lineage.checkpointedKeyed]]): the keyed leaf advertises the
     // layout, so the wedge self-join's two legs (both keyed on src)
     // skip their Exchange AND Sort entirely — the SMJ degenerates to
     // a merge over the stored order (guide §2.4; the 82M-row wedge
     // OUTPUT was never shuffled anyway, it streams into the broadcast
     // closing probe)
-    val (oriented, _) = Dedup.checkpointedKeyed(e
+    val (oriented, _) = Lineage.checkpointedKeyed(e
       .join(deg.select(col("n").as("u"), col("deg").as("du")), Seq("u"))
       .join(deg.select(col("n").as("v"), col("deg").as("dv")), Seq("v"))
       .select(
