@@ -885,12 +885,12 @@ object Bench {
   @volatile private var promotedThisRun: Option[Seq[String]] = None
 
   /** The in-run load sentinel (round-11 verdict ask 2 — the jitter
-    * class burned a DevMoverAttrib cycle in r8/r9/r10): a pinned
-    * CONTROL query — q3_top_order_revenue, the same stable control
-    * DevMoverAttrib interleaves — is sampled inside every batch tier
-    * as it runs, always against the driver's sfDir corpus under the
-    * per-sample cold-data discipline, so its plan and workload never
-    * change across runs. A tier whose control median drifts ≥1.8×
+    * class burned an interleaved attribution cycle in r8/r9/r10): a
+    * pinned CONTROL query — q3_top_order_revenue, the same stable
+    * control that protocol interleaved — is sampled inside every
+    * batch tier as it runs, always against the driver's sfDir corpus
+    * under the per-sample cold-data discipline, so its plan and
+    * workload never change across runs. A tier whose control median drifts ≥1.8×
     * the mirror's cross-run control baseline is experiencing
     * machine-level load, and alarms fired in that tier self-attribute
     * as `run_level_load` at alarm time (BenchMirror.classifyAlarms)
@@ -1389,7 +1389,7 @@ object Bench {
       // stress tier's protocol): the global pass above is ~80 query
       // executions old by the time late queries are measured, and the
       // JIT state it built can be evicted/deoptimized in between —
-      // DevSim1AB measured sim1 decaying 0.68 → 0.30 s from a cold
+      // an n=10 A/B measured sim1 decaying 0.68 → 0.30 s from a cold
       // JIT vs a stable 0.26-0.30 s re-warmed, which is the round 3-5
       // 0.29 ↔ 0.46 s oscillation on unchanged code.
       run(name)

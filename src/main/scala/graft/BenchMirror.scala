@@ -105,7 +105,7 @@ object BenchMirror {
     * load at alarm time (round-11 verdict ask 2). Same baseline-hold
     * and auto-clear semantics as `unattributed`; the separate array
     * exists so the attribution is recorded WITH the alarm instead of
-    * costing a next-round DevMoverAttrib cycle.
+    * costing a next-round interleaved attribution cycle.
     */
   def parseRunLevelLoad(body: String): Set[String] =
     parseNameArray(body, "run_level_load")
@@ -149,9 +149,9 @@ object BenchMirror {
       .map(_.group(1).toDouble)
 
   /** Classify this run's fired alarms with the interleaved control
-    * sentinel (round-11 verdict ask 2 — the class that burned a
-    * DevMoverAttrib cycle in r8/r9/r10): a pinned control query is
-    * sampled INSIDE each tier as it runs; an alarm whose tier's
+    * sentinel (round-11 verdict ask 2 — the class that burned an
+    * interleaved attribution cycle in r8/r9/r10): a pinned control
+    * query is sampled INSIDE each tier as it runs; an alarm whose tier's
     * control median drifted ≥ `driftThreshold`× its cross-run
     * baseline is machine-level load by construction (the control's
     * plan never changes), so it self-attributes as `run_level_load`
@@ -193,8 +193,8 @@ object BenchMirror {
     * a 0.556 baseline — the first two elevated ×2.0/×3.7, flanking
     * exactly the queries that alarmed — but [[classifyAlarms]]
     * compares the TIER MEDIAN (0.831, drift 1.49 < 1.8), so all five
-    * alarms shipped `unattributed` and cost a round-13 DevMoverAttrib
-    * cycle. The per-SAMPLE evidence was in the artifact all along;
+    * alarms shipped `unattributed` and cost a round-13 interleaved
+    * attribution cycle. The per-SAMPLE evidence was in the artifact all along;
     * this classifier consumes it.
     *
     * An alarm self-attributes as `run_level_load` when ANY of:

@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+import java.util.Comparator
+
 import org.apache.spark.sql.SparkSession
 
 /** One place that builds every graft SparkSession, so session-wide conf
@@ -20,6 +23,27 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
 
+  /** This JVM's catalog warehouse (bucketed catalog tables land here,
+    * in tmp rather than the cwd). One directory per process: two JVMs
+    * that shared one wrote the same table paths and failed with
+    * TASK_WRITE_FAILED. Nothing is created up front; Spark makes the
+    * directory on the first catalog write, and a shutdown hook removes
+    * it when the JVM exits.
+    */
+  lazy val warehouseDir: String = {
+    val dir = Paths.get(System.getProperty("java.io.tmpdir"),
+      s"graft_warehouse_${ProcessHandle.current.pid}")
+    sys.addShutdownHook(deleteTree(dir))
+    dir.toString
+  }
+
+  private def deleteTree(dir: Path): Unit =
+    if (Files.exists(dir)) {
+      val paths = Files.walk(dir)
+      try paths.sorted(Comparator.reverseOrder[Path]()).forEach(p => Files.deleteIfExists(p))
+      finally paths.close()
+    }
+
   def local(cpus: String, app: String): SparkSession = {
     val shufflePartitions =
       if (cpus == "*") Runtime.getRuntime.availableProcessors.toString else cpus
@@ -33,9 +57,7 @@ object Sessions {
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // catalog tables (bucketed writes) land in tmp, not the repo cwd
-      .config("spark.sql.warehouse.dir",
-        s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
+      .config("spark.sql.warehouse.dir", warehouseDir)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     // getOrCreate() silently ignores every builder config — including

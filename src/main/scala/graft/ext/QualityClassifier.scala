@@ -80,6 +80,25 @@ object QualityClassifier {
     }
   }
 
+  /** The base every gate-evaluation query starts from: one row per
+    * document with the gate's `score` and the heuristic quality `q`,
+    * both from one token pass. The reference label is `q` above its
+    * corpus median ([[withQualityMedian]]), the heuristic that
+    * [[fit]]'s seed labels distill.
+    */
+  def scoreAndQuality(docs: DataFrame): DataFrame =
+    docs.withColumn("__toks", TextAnalysis.tokens(col("text")))
+      .select(
+        scoreParts(size(col("__toks")), size(array_distinct(col("__toks"))),
+          TextAnalysis.wordFreqs(col("__toks"), featureWords)).as("score"),
+        TextAnalysis.qualityScoreTokens(col("__toks")).as("q"))
+
+  /** `frame` (which has a `q` column) with `__med`, the corpus median
+    * of `q`, joined on as a 1-row broadcast.
+    */
+  def withQualityMedian(frame: DataFrame): DataFrame =
+    frame.crossJoin(broadcast(frame.agg(expr("percentile(q, 0.5)").as("__med"))))
+
   /** Deterministic logistic-regression fit (full-batch gradient
     * descent, rows processed in doc_id order, fixed epochs/rate — the
     * refit-equals-artifact property the spec locks). Labels distill
@@ -145,5 +164,20 @@ object QualityClassifier {
         s"($acc + (${w(i + 1)}) * $x)"
       }
     }
+
+    /** Mirror of [[scoreAndQuality]] + [[withQualityMedian]]: the CTEs
+      * `cte` (score, q) and `med` (m), ready to follow `WITH`.
+      */
+    def scoreAndQuality(cte: String): String =
+      s"""$cte AS (SELECT $scoreSql AS score,
+         |    ${TS.qualityScore} AS q
+         |  FROM documents),
+         |${qualityMedian(cte)}""".stripMargin
+
+    /** Mirror of [[withQualityMedian]]: the CTE `med` (m), the median
+      * of `q` over `cte`.
+      */
+    def qualityMedian(cte: String): String =
+      s"med AS (SELECT quantile_cont(q, 0.5) AS m FROM $cte)"
   }
 }

@@ -1,11 +1,8 @@
 package graft.functions
 
-import java.nio.ByteBuffer
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StructField, StructType}
 
@@ -42,7 +39,7 @@ case class FreqAgg(
     kExpr: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Array[Long]] {
+    extends LongArrayBuffer {
 
   override def children: Seq[Expression] = Seq(item, kExpr)
 
@@ -69,11 +66,8 @@ case class FreqAgg(
 
   override def nullable: Boolean = false
 
-  /** Packed counter pairs [item0, c0, item1, c1, …], unsorted,
-    * ≤ 2k longs, every c > 0.
-    */
-  override def createAggregationBuffer(): Array[Long] = Array.emptyLongArray
-
+  // Buffer: packed counter pairs [item0, c0, item1, c1, …], unsorted,
+  // ≤ 2k longs, every c > 0.
   override def update(buffer: Array[Long], input: InternalRow): Array[Long] = {
     val v = item.eval(input)
     if (v == null) return buffer
@@ -150,21 +144,6 @@ case class FreqAgg(
     }
     new GenericArrayData(
       idx.map(i => InternalRow(buffer(2 * i), buffer(2 * i + 1))))
-  }
-
-  override def serialize(buffer: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 * buffer.length)
-    var i = 0
-    while (i < buffer.length) { bb.putLong(buffer(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val out = new Array[Long](bytes.length / 8)
-    var i = 0
-    while (i < out.length) { out(i) = bb.getLong(); i += 1 }
-    out
   }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): FreqAgg =

@@ -1,11 +1,8 @@
 package graft.functions
 
-import java.nio.ByteBuffer
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StructField, StructType}
 
@@ -42,7 +39,7 @@ case class TopKAgg(
     kExpr: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Array[Long]] {
+    extends LongArrayBuffer {
 
   override def children: Seq[Expression] = Seq(value, id, kExpr)
 
@@ -69,11 +66,6 @@ case class TopKAgg(
 
   override def nullable: Boolean = false
 
-  /** Packed sorted pairs [v0, id0, v1, id1, …], (v desc, id asc),
-    * length ≤ 2k.
-    */
-  override def createAggregationBuffer(): Array[Long] = Array.emptyLongArray
-
   /** true iff (v1, i1) orders strictly before (v2, i2). */
   private def before(v1: Long, i1: Long, v2: Long, i2: Long): Boolean =
     v1 > v2 || (v1 == v2 && i1 < i2)
@@ -97,6 +89,8 @@ case class TopKAgg(
     }
   }
 
+  // Buffer: packed sorted pairs [v0, id0, v1, id1, …], (v desc, id
+  // asc), length ≤ 2k.
   override def update(buffer: Array[Long], input: InternalRow): Array[Long] = {
     val v = value.eval(input)
     val i = id.eval(input)
@@ -128,21 +122,6 @@ case class TopKAgg(
     new GenericArrayData(
       Array.tabulate(buffer.length / 2)(i =>
         InternalRow(buffer(2 * i), buffer(2 * i + 1))))
-
-  override def serialize(buffer: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 * buffer.length)
-    var i = 0
-    while (i < buffer.length) { bb.putLong(buffer(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val out = new Array[Long](bytes.length / 8)
-    var i = 0
-    while (i < out.length) { out(i) = bb.getLong(); i += 1 }
-    out
-  }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): TopKAgg =
     copy(mutableAggBufferOffset = newOffset)

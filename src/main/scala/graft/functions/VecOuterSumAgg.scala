@@ -1,11 +1,8 @@
 package graft.functions
 
-import java.nio.ByteBuffer
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
@@ -50,7 +47,7 @@ case class VecOuterSumAgg(
     child: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Array[Long]] {
+    extends LongArrayBuffer {
 
   override def children: Seq[Expression] = Seq(child)
 
@@ -68,11 +65,8 @@ case class VecOuterSumAgg(
 
   override def nullable: Boolean = true
 
-  /** Empty = "no input seen yet"; the first non-null row sizes the
-    * D² buffer. Only entries with i ≤ j are touched before eval.
-    */
-  override def createAggregationBuffer(): Array[Long] = Array.emptyLongArray
-
+  // Buffer: empty = "no input seen yet"; the first non-null row sizes
+  // the D² buffer. Only entries with i ≤ j are touched before eval.
   override def update(buffer: Array[Long], input: InternalRow): Array[Long] = {
     val v = child.eval(input)
     if (v == null) buffer
@@ -139,21 +133,6 @@ case class VecOuterSumAgg(
       }
       new GenericArrayData(out)
     }
-
-  override def serialize(buffer: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(8 * buffer.length)
-    var i = 0
-    while (i < buffer.length) { bb.putLong(buffer(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    val out = new Array[Long](bytes.length / 8)
-    var i = 0
-    while (i < out.length) { out(i) = bb.getLong(); i += 1 }
-    out
-  }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): VecOuterSumAgg =
     copy(mutableAggBufferOffset = newOffset)

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.SessionIslands
+
 /** Semi-structured + event-time query surface over `events` (round-1
   * verdict items 5 and 9): JSON props extraction and event-time
   * windowing (tumbling + session). These are extension queries — they
@@ -13,6 +15,13 @@ object EventQueries {
 
   private def events(s: SparkSession, d: String): DataFrame =
     graft.sources.Tables.table(s, d, "events")
+
+  /** Events per hour: (hr, cnt), hr the epoch hour number. */
+  private def hourlyCounts(s: SparkSession, d: String): DataFrame =
+    events(s, d)
+      .groupBy((unix_timestamp(date_trunc("hour", col("ts"))) / 3600)
+        .cast("long").as("hr"))
+      .agg(count(lit(1)).as("cnt"))
 
   /** Releasable plan-deduped cache (shared TrackedCache discipline) —
     * here it backs ops/Rank's two-action range-partitioned frames.
@@ -249,13 +258,8 @@ object EventQueries {
       "j3_range_join_sessions",
       (s, d) => {
         val ev = events(s, d).select("user_id", "ts")
-        val sessions = events(s, d)
-          .groupBy(col("user_id"), session_window(col("ts"), "6 hours"))
-          .agg(count(lit(1)).as("window_cnt"))
-          .select(col("user_id"),
-            col("session_window.start").as("session_start"),
-            col("session_window.end").as("session_end"),
-            col("window_cnt"))
+        val sessions = SessionIslands.sessionWindows(events(s, d))
+          .withColumnRenamed("cnt", "window_cnt")
         graft.ops.RangeJoin.pointInInterval(
             ev, sessions, Seq("user_id"), "ts", "session_start", "session_end",
             bucketSeconds = 6 * 3600L)
@@ -265,53 +269,25 @@ object EventQueries {
             col("cnt"), (col("cnt") === col("window_cnt")).as("counts_agree"))
           .orderBy("user_id", "session_start")
       },
-      Some("""SELECT s.user_id, s.session_start, count(*) AS cnt,
+      Some(s"""WITH ${SessionIslands.Sql.sessionWindows("s")}
+             |SELECT s.user_id, s.session_start, count(*) AS cnt,
              |  count(*) = s.cnt AS counts_agree
-             |FROM events l JOIN
-             |(SELECT user_id, min(ts) AS session_start,
-             |        max(ts) + INTERVAL 6 HOUR AS session_end, count(*) AS cnt
-             | FROM (SELECT user_id, ts,
-             |         sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
-             |                          ROWS UNBOUNDED PRECEDING) AS sid
-             |       FROM (SELECT user_id, ts,
-             |               CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-             |                 OR ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-             |                    >= INTERVAL 6 HOUR
-             |               THEN 1 ELSE 0 END AS new_s
-             |             FROM events))
-             | GROUP BY user_id, sid) s
+             |FROM events l JOIN s
              |ON l.user_id = s.user_id AND l.ts >= s.session_start AND l.ts < s.session_end
              |GROUP BY s.user_id, s.session_start, s.cnt
              |ORDER BY s.user_id, s.session_start""".stripMargin)),
 
     // ----- session window per user (6 h gap; session ends gap after
     // the last event). Oracle = classic gaps-and-islands SQL: a new
-    // island starts when the inter-event gap is >= the session gap —
-    // Spark sessions are half-open [ts, ts+gap), so an event landing
-    // exactly at the previous end starts a NEW session.
+    // island starts when the inter-event gap exceeds the session gap —
+    // Spark extends a session by an event landing exactly at its end
+    // (SessionIslandsSpec pins this).
     QueryDef(
       "t_session_window",
-      (s, d) => events(s, d)
-        .groupBy(col("user_id"), session_window(col("ts"), "6 hours"))
-        .agg(count(lit(1)).as("cnt"))
-        .select(col("user_id"),
-          col("session_window.start").as("session_start"),
-          col("session_window.end").as("session_end"),
-          col("cnt"))
+      (s, d) => SessionIslands.sessionWindows(events(s, d))
         .orderBy("user_id", "session_start"),
-      Some("""SELECT user_id, session_start, session_end, cnt FROM
-             |(SELECT user_id, min(ts) AS session_start,
-             |        max(ts) + INTERVAL 6 HOUR AS session_end, count(*) AS cnt
-             | FROM (SELECT user_id, ts,
-             |         sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
-             |                          ROWS UNBOUNDED PRECEDING) AS sid
-             |       FROM (SELECT user_id, ts,
-             |               CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-             |                 OR ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-             |                    >= INTERVAL 6 HOUR
-             |               THEN 1 ELSE 0 END AS new_s
-             |             FROM events))
-             | GROUP BY user_id, sid)
+      Some(s"""WITH ${SessionIslands.Sql.sessionWindows("s")}
+             |SELECT user_id, session_start, session_end, cnt FROM s
              |ORDER BY user_id, session_start""".stripMargin)),
 
     // ----- event-RATE anomaly detection: z-score the hourly event
@@ -770,10 +746,7 @@ object EventQueries {
     QueryDef(
       "t_ewma_burst",
       (s, d) => {
-        val hourly = events(s, d)
-          .groupBy((unix_timestamp(date_trunc("hour", col("ts"))) / 3600)
-            .cast("long").as("hr"))
-          .agg(count(lit(1)).as("cnt"))
+        val hourly = hourlyCounts(s, d)
         hourly
           .agg(sort_array(collect_list(struct(col("hr"), col("cnt")))).as("xs"))
           .select(explode(expr(
@@ -1480,16 +1453,10 @@ object EventQueries {
       "t_top_paths",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val gapUs = 6L * 3600L * 1000000L
-        val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        val sid = events(s, d)
-          .withColumn("us", unix_micros(col("ts")))
-          .withColumn("prev", lag("us", 1).over(w))
-          .withColumn("new_s",
-            when(col("prev").isNull || col("us") - col("prev") >= gapUs, 1L)
-              .otherwise(0L))
-          .withColumn("sid", sum("new_s")
-            .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        val sid = SessionIslands.withSid(
+          events(s, d).withColumn("us", unix_micros(col("ts"))), "us",
+          Seq(col("ts"), col("event_id")), SessionIslands.GapSeconds * 1000000L,
+          inclusive = true)
         val rk = sid.withColumn("rk", row_number()
           .over(Window.partitionBy("user_id", "sid").orderBy("ts", "event_id")))
         rk.filter(col("rk") <= 3)
@@ -1502,19 +1469,13 @@ object EventQueries {
           .orderBy(col("n_sessions").desc, col("path"))
           .limit(15)
       },
-      Some("""WITH e AS (SELECT user_id, event_id, ts, event_type,
-             |    epoch_us(ts) AS us,
-             |    lag(epoch_us(ts)) OVER
-             |      (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-             |  FROM events),
-             |s AS (SELECT *, CAST(sum(CASE WHEN prev IS NULL
-             |      OR us - prev >= 21600000000 THEN 1 ELSE 0 END) OVER
-             |    (PARTITION BY user_id ORDER BY ts, event_id
-             |     ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sid
-             |  FROM e),
+      Some(s"""WITH e AS (SELECT user_id, event_id, ts, event_type,
+             |    epoch_us(ts) AS us FROM events),
+             |${SessionIslands.Sql.islands("e", "us", Seq("ts", "event_id"),
+                 (SessionIslands.GapSeconds * 1000000L).toString, inclusive = true)},
              |r AS (SELECT *, row_number() OVER
              |    (PARTITION BY user_id, sid ORDER BY ts, event_id) AS rk
-             |  FROM s),
+             |  FROM si),
              |p AS (SELECT user_id, sid, concat_ws('>',
              |    max(CASE WHEN rk = 1 THEN event_type END),
              |    max(CASE WHEN rk = 2 THEN event_type END),
@@ -1862,10 +1823,7 @@ object EventQueries {
     QueryDef(
       "t_holt_forecast",
       (s, d) => {
-        val hourly = events(s, d)
-          .groupBy((unix_timestamp(date_trunc("hour", col("ts"))) / 3600)
-            .cast("long").as("hr"))
-          .agg(count(lit(1)).as("cnt"))
+        val hourly = hourlyCounts(s, d)
         hourly
           .agg(sort_array(collect_list(struct(col("hr"), col("cnt")))).as("xs"))
           .filter(size(col("xs")) >= 3)
@@ -2047,10 +2005,7 @@ object EventQueries {
     QueryDef(
       "t_theil_sen_counts",
       (s, d) => {
-        val hourly = events(s, d)
-          .groupBy((unix_timestamp(date_trunc("hour", col("ts"))) / 3600)
-            .cast("long").as("hr"))
-          .agg(count(lit(1)).as("cnt"))
+        val hourly = hourlyCounts(s, d)
         val lo = hourly.agg(min("hr").as("__lo"))
         val pts = hourly.crossJoin(broadcast(lo))
           .select((col("hr") - col("__lo")).as("x"), col("cnt").as("y"))
@@ -2168,10 +2123,7 @@ object EventQueries {
       "t_autocorrelation",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val hourly = events(s, d)
-          .groupBy((unix_timestamp(date_trunc("hour", col("ts"))) / 3600)
-            .cast("long").as("hr"))
-          .agg(count(lit(1)).as("cnt"))
+        val hourly = hourlyCounts(s, d)
         val ow = Window.orderBy("hr")
         val lags = Seq(1, 2, 3, 6, 12, 24)
         val withLags = hourly.select(
@@ -2507,38 +2459,7 @@ object EventQueries {
     QueryDef(
       "a36_survival_km",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val uw = Window.partitionBy("user_id").orderBy("ts")
-        val sess = events(s, d)
-          .select(col("user_id"), unix_timestamp(col("ts")).as("ts"))
-          .withColumn("new_s",
-            when(col("ts") - lag("ts", 1).over(
-              Window.partitionBy("user_id").orderBy("ts")) > 21600L, 1L)
-              .otherwise(when(lag("ts", 1).over(
-                Window.partitionBy("user_id").orderBy("ts")).isNull, 1L)
-                .otherwise(0L)))
-          .withColumn("sid", sum("new_s").over(
-            uw.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-          .groupBy("user_id", "sid")
-          .agg(min("ts").as("first_s"), max("ts").as("last_s"))
-        val edge = events(s, d)
-          .agg(max(unix_timestamp(col("ts"))).as("__edge"))
-        val durs = sess.crossJoin(broadcast(edge))
-          .select(
-            call_function("div", col("last_s") - col("first_s"), lit(600L))
-              .as("dur"),
-            when(col("last_s") > col("__edge") - 21600L, 0L).otherwise(1L)
-              .as("died"))
-        val hist = durs.groupBy("dur")
-          .agg(count(lit(1)).as("n_all"), sum("died").as("d"))
-        val risk = hist
-          .withColumn("n_risk", sum("n_all").over(Window.orderBy("dur")
-            .rowsBetween(Window.currentRow, Window.unboundedFollowing)))
-          .filter(col("d") > 0L)
-        risk
-          .agg(sort_array(collect_list(struct(col("dur"), col("d"),
-            col("n_risk")))).as("xs"))
-          .filter(size(col("xs")) >= 1)
+        SessionIslands.survivalRisk(events(s, d))
           .select(explode(expr(
             """transform(sequence(1, size(xs)), t -> named_struct(
               |  'dur', xs[t-1].dur, 'd', xs[t-1].d, 'n_risk', xs[t-1].n_risk,
@@ -2550,38 +2471,7 @@ object EventQueries {
             col("r.d").as("deaths"), round(col("r.surv"), 6).as("survival"))
           .orderBy("dur_10min")
       },
-      Some("""WITH ev AS (SELECT user_id, epoch_us(ts) // 1000000 AS ts
-             |  FROM events),
-             |fl AS (SELECT user_id, ts,
-             |    CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-             |      IS NULL THEN 1
-             |    WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-             |      > 21600 THEN 1 ELSE 0 END AS new_s
-             |  FROM ev),
-             |si AS (SELECT user_id, ts,
-             |    sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-             |  FROM fl),
-             |sess AS (SELECT user_id, sid,
-             |    CAST(min(ts) AS BIGINT) AS first_s,
-             |    CAST(max(ts) AS BIGINT) AS last_s
-             |  FROM si GROUP BY 1, 2),
-             |edge AS (SELECT CAST(max(ts) AS BIGINT) AS e FROM ev),
-             |durs AS (SELECT (last_s - first_s) // 600 AS dur,
-             |    CASE WHEN last_s > (SELECT e FROM edge) - 21600
-             |      THEN 0 ELSE 1 END AS died
-             |  FROM sess),
-             |hist AS (SELECT dur, CAST(count(*) AS BIGINT) AS n_all,
-             |    CAST(sum(died) AS BIGINT) AS d
-             |  FROM durs GROUP BY 1),
-             |risk AS (SELECT dur, d,
-             |    CAST(sum(n_all) OVER (ORDER BY dur DESC
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-             |      AS BIGINT) AS n_risk
-             |  FROM hist),
-             |packed AS (SELECT list_sort(list(struct_pack(dur := dur, d := d,
-             |      n_risk := n_risk))) AS xs
-             |  FROM risk WHERE d > 0),
+      Some(s"""WITH ${SessionIslands.Sql.survivalRisk},
              |f AS (SELECT unnest(list_transform(range(1, len(xs) + 1),
              |    t -> struct_pack(
              |      dur := xs[t].dur, d := xs[t].d, n_risk := xs[t].n_risk,
@@ -2611,38 +2501,7 @@ object EventQueries {
     QueryDef(
       "a52_nelson_aalen",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val uw = Window.partitionBy("user_id").orderBy("ts")
-        val sess = events(s, d)
-          .select(col("user_id"), unix_timestamp(col("ts")).as("ts"))
-          .withColumn("new_s",
-            when(col("ts") - lag("ts", 1).over(
-              Window.partitionBy("user_id").orderBy("ts")) > 21600L, 1L)
-              .otherwise(when(lag("ts", 1).over(
-                Window.partitionBy("user_id").orderBy("ts")).isNull, 1L)
-                .otherwise(0L)))
-          .withColumn("sid", sum("new_s").over(
-            uw.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-          .groupBy("user_id", "sid")
-          .agg(min("ts").as("first_s"), max("ts").as("last_s"))
-        val edge = events(s, d)
-          .agg(max(unix_timestamp(col("ts"))).as("__edge"))
-        val durs = sess.crossJoin(broadcast(edge))
-          .select(
-            call_function("div", col("last_s") - col("first_s"), lit(600L))
-              .as("dur"),
-            when(col("last_s") > col("__edge") - 21600L, 0L).otherwise(1L)
-              .as("died"))
-        val hist = durs.groupBy("dur")
-          .agg(count(lit(1)).as("n_all"), sum("died").as("d"))
-        val risk = hist
-          .withColumn("n_risk", sum("n_all").over(Window.orderBy("dur")
-            .rowsBetween(Window.currentRow, Window.unboundedFollowing)))
-          .filter(col("d") > 0L)
-        risk
-          .agg(sort_array(collect_list(struct(col("dur"), col("d"),
-            col("n_risk")))).as("xs"))
-          .filter(size(col("xs")) >= 1)
+        SessionIslands.survivalRisk(events(s, d))
           .select(explode(expr(
             """transform(sequence(1, size(xs)), t -> named_struct(
               |  'dur', xs[t-1].dur, 'd', xs[t-1].d, 'n_risk', xs[t-1].n_risk,
@@ -2659,38 +2518,7 @@ object EventQueries {
             round(sqrt(col("r.hvar")), 6).as("se"))
           .orderBy("dur_10min")
       },
-      Some("""WITH ev AS (SELECT user_id, epoch_us(ts) // 1000000 AS ts
-             |  FROM events),
-             |fl AS (SELECT user_id, ts,
-             |    CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-             |      IS NULL THEN 1
-             |    WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-             |      > 21600 THEN 1 ELSE 0 END AS new_s
-             |  FROM ev),
-             |si AS (SELECT user_id, ts,
-             |    sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-             |  FROM fl),
-             |sess AS (SELECT user_id, sid,
-             |    CAST(min(ts) AS BIGINT) AS first_s,
-             |    CAST(max(ts) AS BIGINT) AS last_s
-             |  FROM si GROUP BY 1, 2),
-             |edge AS (SELECT CAST(max(ts) AS BIGINT) AS e FROM ev),
-             |durs AS (SELECT (last_s - first_s) // 600 AS dur,
-             |    CASE WHEN last_s > (SELECT e FROM edge) - 21600
-             |      THEN 0 ELSE 1 END AS died
-             |  FROM sess),
-             |hist AS (SELECT dur, CAST(count(*) AS BIGINT) AS n_all,
-             |    CAST(sum(died) AS BIGINT) AS d
-             |  FROM durs GROUP BY 1),
-             |risk AS (SELECT dur, d,
-             |    CAST(sum(n_all) OVER (ORDER BY dur DESC
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-             |      AS BIGINT) AS n_risk
-             |  FROM hist),
-             |packed AS (SELECT list_sort(list(struct_pack(dur := dur, d := d,
-             |      n_risk := n_risk))) AS xs
-             |  FROM risk WHERE d > 0),
+      Some(s"""WITH ${SessionIslands.Sql.survivalRisk},
              |f AS (SELECT unnest(list_transform(range(1, len(xs) + 1),
              |    t -> struct_pack(
              |      dur := xs[t].dur, d := xs[t].d, n_risk := xs[t].n_risk,
@@ -2727,17 +2555,7 @@ object EventQueries {
     QueryDef(
       "j10_overlap_join",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val uw = Window.partitionBy("user_id").orderBy("ts")
-        val sess = events(s, d)
-          .select(col("user_id"), unix_timestamp(col("ts")).as("ts"))
-          .withColumn("new_s",
-            when(col("ts") - lag("ts", 1).over(uw) > 21600L, 1L)
-              .otherwise(when(lag("ts", 1).over(uw).isNull, 1L).otherwise(0L)))
-          .withColumn("sid", sum("new_s").over(
-            uw.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-          .groupBy("user_id", "sid")
-          .agg(min("ts").as("s0"), max("ts").as("s1"))
+        val sess = SessionIslands.spans(events(s, d))
           .filter(col("s1") > col("s0"))
         val start = events(s, d)
           .agg((call_function("div", min(unix_timestamp(col("ts"))),
@@ -2757,21 +2575,7 @@ object EventQueries {
             max("overlap_sec").as("max_overlap_sec"))
           .orderBy("wk")
       },
-      Some("""WITH ev AS (SELECT user_id, epoch_us(ts) // 1000000 AS ts
-             |  FROM events),
-             |fl AS (SELECT user_id, ts,
-             |    CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-             |      IS NULL THEN 1
-             |    WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-             |      > 21600 THEN 1 ELSE 0 END AS new_s
-             |  FROM ev),
-             |si AS (SELECT user_id, ts,
-             |    sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-             |  FROM fl),
-             |sess AS (SELECT user_id, sid,
-             |    CAST(min(ts) AS BIGINT) AS s0, CAST(max(ts) AS BIGINT) AS s1
-             |  FROM si GROUP BY 1, 2 HAVING max(ts) > min(ts)),
+      Some(s"""WITH ${SessionIslands.Sql.spans},
              |day0 AS (SELECT (min(ts) // 86400) * 86400 AS d0 FROM ev),
              |promos AS (SELECT wk,
              |    (SELECT d0 FROM day0) + wk * 604800 + 172800 AS p0,
@@ -2779,7 +2583,8 @@ object EventQueries {
              |  FROM (SELECT unnest(range(0, 4)) AS wk)),
              |ov AS (SELECT p.wk,
              |    least(s.s1, p.p1) - greatest(s.s0, p.p0) AS overlap_sec
-             |  FROM sess s JOIN promos p ON s.s0 < p.p1 AND p.p0 < s.s1)
+             |  FROM sess s JOIN promos p ON s.s0 < p.p1 AND p.p0 < s.s1
+             |  WHERE s.s1 > s.s0)
              |SELECT CAST(wk AS BIGINT) AS wk, count(*) AS n_sessions,
              |  CAST(sum(overlap_sec) AS BIGINT) AS total_overlap_sec,
              |  CAST(max(overlap_sec) AS BIGINT) AS max_overlap_sec
@@ -2804,16 +2609,7 @@ object EventQueries {
       "a37_logrank",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val uw = Window.partitionBy("user_id").orderBy("ts")
-        val sess = events(s, d)
-          .select(col("user_id"), unix_timestamp(col("ts")).as("ts"))
-          .withColumn("new_s",
-            when(col("ts") - lag("ts", 1).over(uw) > 21600L, 1L)
-              .otherwise(when(lag("ts", 1).over(uw).isNull, 1L).otherwise(0L)))
-          .withColumn("sid", sum("new_s").over(
-            uw.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-          .groupBy("user_id", "sid")
-          .agg(min("ts").as("s0"), max("ts").as("s1"))
+        val sess = SessionIslands.spans(events(s, d))
         val day0 = events(s, d).agg(
           (call_function("div", min(unix_timestamp(col("ts"))), lit(86400L))
             * 86400L).as("__d0"),
@@ -2822,7 +2618,7 @@ object EventQueries {
           .select(
             call_function("div", col("s1") - col("s0"), lit(600L)).as("dur"),
             when(col("s0") < col("__d0") + 1296000L, 1L).otherwise(0L).as("g1"),
-            when(col("s1") > col("__edge") - 21600L, 0L).otherwise(1L)
+            when(col("s1") > col("__edge") - SessionIslands.GapSeconds, 0L).otherwise(1L)
               .as("died"))
         val hist = durs.groupBy("dur")
           .agg(count(lit(1)).as("na"), sum("g1").as("na1"),
@@ -2861,27 +2657,13 @@ object EventQueries {
             round(expr("IF(r[2] > 0D, (r[0] - r[1]) * (r[0] - r[1]) / r[2], NULL)"), 6)
               .as("chi2"))
       },
-      Some("""WITH ev AS (SELECT user_id, epoch_us(ts) // 1000000 AS ts
-             |  FROM events),
-             |fl AS (SELECT user_id, ts,
-             |    CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-             |      IS NULL THEN 1
-             |    WHEN ts - lag(ts) OVER (PARTITION BY user_id ORDER BY ts)
-             |      > 21600 THEN 1 ELSE 0 END AS new_s
-             |  FROM ev),
-             |si AS (SELECT user_id, ts,
-             |    sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
-             |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-             |  FROM fl),
-             |sess AS (SELECT user_id, sid,
-             |    CAST(min(ts) AS BIGINT) AS s0, CAST(max(ts) AS BIGINT) AS s1
-             |  FROM si GROUP BY 1, 2),
+      Some(s"""WITH ${SessionIslands.Sql.spans},
              |day0 AS (SELECT (min(ts) // 86400) * 86400 AS d0 FROM ev),
              |edge AS (SELECT CAST(max(ts) AS BIGINT) AS e FROM ev),
              |durs AS (SELECT (s1 - s0) // 600 AS dur,
              |    CASE WHEN s0 < (SELECT d0 FROM day0) + 1296000
              |      THEN 1 ELSE 0 END AS g1,
-             |    CASE WHEN s1 > (SELECT e FROM edge) - 21600
+             |    CASE WHEN s1 > (SELECT e FROM edge) - ${SessionIslands.GapSeconds}
              |      THEN 0 ELSE 1 END AS died
              |  FROM sess),
              |hist AS (SELECT dur,
@@ -3074,10 +2856,7 @@ object EventQueries {
     QueryDef(
       "t_goertzel_power",
       (s, d) => {
-        val hourly = events(s, d)
-          .groupBy((unix_timestamp(date_trunc("hour", col("ts"))) / 3600)
-            .cast("long").as("hr"))
-          .agg(count(lit(1)).as("cnt"))
+        val hourly = hourlyCounts(s, d)
         Seq(6L, 3L, 2L).map { b =>
           val blocks = hourly
             .groupBy(call_function("div", col("hr"), lit(b)).as("blk"))
@@ -4759,10 +4538,7 @@ object EventQueries {
       "t_ljung_box",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val hourly = events(s, d)
-          .groupBy((unix_timestamp(date_trunc("hour", col("ts"))) / 3600)
-            .cast("long").as("hr"))
-          .agg(count(lit(1)).as("cnt"))
+        val hourly = hourlyCounts(s, d)
         val ow = Window.orderBy("hr")
         val lags = (1 to 12).toSeq
         val withLags = tracked(hourly.select(
@@ -4960,10 +4736,7 @@ object EventQueries {
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
         val kMax = 8
-        val hourly = events(s, d)
-          .groupBy((unix_timestamp(date_trunc("hour", col("ts"))) / 3600)
-            .cast("long").as("hr"))
-          .agg(count(lit(1)).as("cnt"))
+        val hourly = hourlyCounts(s, d)
         val ow = Window.orderBy("hr")
         val lags = (1 to kMax).toSeq
         val withLags = tracked(hourly.select(
@@ -5445,10 +5218,7 @@ object EventQueries {
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
         val ow = Window.orderBy("hr")
-        val hourly = events(s, d)
-          .groupBy((unix_timestamp(date_trunc("hour", col("ts"))) / 3600)
-            .cast("long").as("hr"))
-          .agg(count(lit(1)).as("cnt"))
+        val hourly = hourlyCounts(s, d)
         hourly
           .withColumn("l1", lag("cnt", 1).over(ow))
           .withColumn("l24", lag("cnt", 24).over(ow))
@@ -5622,16 +5392,10 @@ object EventQueries {
       "a53_shapley_attribution",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val uw = Window.partitionBy("user_id").orderBy(col("tsec"), col("event_id"))
         val ev = events(s, d).select(col("user_id"), col("event_type"),
           col("event_id"), unix_timestamp(col("ts")).as("tsec"))
-        val si = ev
-          .withColumn("new_s",
-            when(lag("tsec", 1).over(uw).isNull, 1L)
-              .when(col("tsec") - lag("tsec", 1).over(uw) > 21600L, 1L)
-              .otherwise(0L))
-          .withColumn("sid", sum("new_s").over(
-            uw.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        val si = SessionIslands.withSid(ev, "tsec", Seq(col("tsec"), col("event_id")),
+          SessionIslands.GapSeconds, inclusive = false)
         val seq = tracked(si.withColumn("rn", row_number().over(
           Window.partitionBy("user_id", "sid")
             .orderBy(col("tsec"), col("event_id"))).cast("long")))
@@ -5676,16 +5440,10 @@ object EventQueries {
               " (acc, x) -> acc + x.term)") / 24.0, 6).as("phi"))
           .orderBy("channel")
       },
-      Some("""WITH ev AS (SELECT user_id, event_type, event_id,
-             |    epoch_us(ts) // 1000000 AS tsec FROM events),
-             |fl AS (SELECT *, CASE WHEN lag(tsec) OVER w IS NULL THEN 1
-             |    WHEN tsec - lag(tsec) OVER w > 21600 THEN 1 ELSE 0 END
-             |      AS new_s
-             |  FROM ev WINDOW w AS (PARTITION BY user_id
-             |    ORDER BY tsec, event_id)),
-             |si AS (SELECT *, sum(new_s) OVER (PARTITION BY user_id
-             |    ORDER BY tsec, event_id ROWS UNBOUNDED PRECEDING) AS sid
-             |  FROM fl),
+      Some(s"""WITH ev AS (SELECT user_id, event_type, event_id,
+             |    ${SessionIslands.Sql.seconds} AS tsec FROM events),
+             |${SessionIslands.Sql.islands("ev", "tsec", Seq("tsec", "event_id"),
+                 SessionIslands.GapSeconds.toString, inclusive = false)},
              |seq AS (SELECT user_id, sid, event_type,
              |    CAST(row_number() OVER (PARTITION BY user_id, sid
              |      ORDER BY tsec, event_id) AS BIGINT) AS rn FROM si),

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ops.{CoPurchase, Derive, Stats}
+import graft.ops.{CoPurchase, CustomerSupplier, Derive, Stats}
 import graft.read.Dashboard
 
 /** One oracle-checked query: Spark implementation + equivalent DuckDB
@@ -671,11 +671,11 @@ object ParityQueries {
       "j4_bucketed_join",
       (s, d) => {
         // suffix keyed on the dir BASENAME, not a path hash: distinct
-        // full paths with the same basename reuse (rewrite) one
-        // warehouse table, so repeated runs across scratch dirs can't
-        // accumulate unbounded bucketed copies — the trade (two
-        // same-basename dirs interleaved lazily would alias) doesn't
-        // arise in the one-dir-at-a-time driver/bench/stress flows
+        // full paths with the same basename reuse (rewrite) one table
+        // in this JVM's warehouse, so repeated runs over many corpus
+        // dirs can't accumulate unbounded bucketed copies — the trade
+        // (two same-basename dirs interleaved lazily would alias)
+        // doesn't arise in the one-dir-at-a-time driver/bench/stress flows
         val suffix = d.replaceAll("/+$", "").replaceAll(".*/", "")
           .replaceAll("[^A-Za-z0-9_]", "_").toLowerCase
         val lt = s"graft_bkt_lineitem_$suffix"
@@ -972,13 +972,7 @@ object ParityQueries {
     QueryDef(
       "g21_stress_centrality",
       (s, d) => {
-        val e0 = t(s, d, "orders")
-          .join(t(s, d, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-          .select((col("o_custkey").cast("long") * 2).as("src"),
-            (col("l_suppkey").cast("long") * 2 + 1).as("dst"))
-          .distinct()
-        val edges = e0.unionAll(
-          e0.select(col("dst").as("src"), col("src").as("dst")))
+        val edges = CustomerSupplier.edges(t(s, d, "orders"), t(s, d, "lineitem"))
         val seeds = edges.select(col("src").as("seed")).distinct()
           .filter(col("seed") % 2 === 1 && col("seed") < 16L)
         val p = tracked(graft.ext.Stress.sigmaTable(edges, seeds, 4,
@@ -999,11 +993,8 @@ object ParityQueries {
           .groupBy(col("a.node").as("v"))
           .agg(sum(col("a.sigma") * col("b.sigma")).as("stress"),
             count(lit(1)).as("n_pairs"))
-          .select(
-            when(col("v") % 2 === 0, lit("customer"))
-              .otherwise(lit("supplier")).as("kind"),
-            call_function("div", col("v"), lit(2L)).as("key"),
-            col("stress"), col("n_pairs"))
+          .select(CustomerSupplier.kindKey(col("v")) ++
+            Seq(col("stress"), col("n_pairs")): _*)
           .orderBy(col("stress").desc, col("kind"), col("key"))
           .limit(20)
       },
@@ -1033,18 +1024,12 @@ object ParityQueries {
       "g22_neighborhood_function",
       (s, d) => {
         val P = graft.ext.NearDup.P
-        val e0 = t(s, d, "orders")
-          .join(t(s, d, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-          .select((col("o_custkey").cast("long") * 2).as("src"),
-            (col("l_suppkey").cast("long") * 2 + 1).as("dst"))
-          .distinct()
         // cache the symmetrized edges already partitioned + sorted on
         // the probe key: InMemoryTableScan advertises the cached
         // child's partitioning/ordering, so all three propagate-round
         // SortMergeJoins (and the nodes distinct) skip their edge-side
         // Exchange AND Sort (guide §2.4)
-        val edges = tracked(e0.unionAll(
-          e0.select(col("dst").as("src"), col("src").as("dst")))
+        val edges = tracked(CustomerSupplier.edges(t(s, d, "orders"), t(s, d, "lineitem"))
           .repartition(col("src")).sortWithinPartitions("src"))
         val nodes = tracked(edges.select(col("src").as("v")).distinct())
         val h0 = graft.ext.NearDup.charHash(col("v").cast("string"))
@@ -1720,22 +1705,7 @@ object ParityQueries {
           col("valid_from"), col("valid_to"), col("is_current"),
           col("version"))
         .orderBy("custkey", "version"),
-      Some("""WITH log AS (SELECT * FROM orders WHERE o_custkey % 100 = 0),
-             |changes AS (SELECT * FROM (
-             |  SELECT o_custkey, o_orderpriority, o_orderdate, o_orderkey,
-             |    lag(o_orderpriority) OVER (PARTITION BY o_custkey
-             |      ORDER BY o_orderdate, o_orderkey) AS prev
-             |  FROM log)
-             |  WHERE prev IS NULL OR prev <> o_orderpriority)
-             |SELECT o_custkey AS custkey, o_orderpriority AS priority,
-             |  o_orderdate AS valid_from,
-             |  lead(o_orderdate) OVER (PARTITION BY o_custkey
-             |    ORDER BY o_orderdate, o_orderkey) AS valid_to,
-             |  lead(o_orderdate) OVER (PARTITION BY o_custkey
-             |    ORDER BY o_orderdate, o_orderkey) IS NULL AS is_current,
-             |  row_number() OVER (PARTITION BY o_custkey
-             |    ORDER BY o_orderdate, o_orderkey)::BIGINT AS version
-             |FROM changes ORDER BY custkey, version""".stripMargin)),
+      Some(scd2HistorySql)),
 
     // ----- month-over-month rank-movement trending (the "movers"
     // analytic behind merchandising and anomaly triage — absolute
@@ -2033,22 +2003,7 @@ object ParityQueries {
           .orderBy("custkey", "version")
       },
       // the full rebuild — scd2_history's exact SQL: merge must equal it
-      Some("""WITH log AS (SELECT * FROM orders WHERE o_custkey % 100 = 0),
-             |changes AS (SELECT * FROM (
-             |  SELECT o_custkey, o_orderpriority, o_orderdate, o_orderkey,
-             |    lag(o_orderpriority) OVER (PARTITION BY o_custkey
-             |      ORDER BY o_orderdate, o_orderkey) AS prev
-             |  FROM log)
-             |  WHERE prev IS NULL OR prev <> o_orderpriority)
-             |SELECT o_custkey AS custkey, o_orderpriority AS priority,
-             |  o_orderdate AS valid_from,
-             |  lead(o_orderdate) OVER (PARTITION BY o_custkey
-             |    ORDER BY o_orderdate, o_orderkey) AS valid_to,
-             |  lead(o_orderdate) OVER (PARTITION BY o_custkey
-             |    ORDER BY o_orderdate, o_orderkey) IS NULL AS is_current,
-             |  row_number() OVER (PARTITION BY o_custkey
-             |    ORDER BY o_orderdate, o_orderkey)::BIGINT AS version
-             |FROM changes ORDER BY custkey, version""".stripMargin)),
+      Some(scd2HistorySql)),
 
     // ----- point-in-time (PIT) correct dimension join — the CONSUMER
     // of scd2_history's effective-dated dimension, and the feature-
@@ -2256,29 +2211,15 @@ object ParityQueries {
     QueryDef(
       "g1_pagerank",
       (s, d) => {
-        val e0 = t(s, d, "orders")
-          .join(t(s, d, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-          .select((col("o_custkey").cast("long") * 2).as("src"),
-            (col("l_suppkey").cast("long") * 2 + 1).as("dst"))
-          .distinct()
-        val edges = e0.unionAll(
-          e0.select(col("dst").as("src"), col("src").as("dst")))
+        val edges = CustomerSupplier.edges(t(s, d, "orders"), t(s, d, "lineitem"))
         graft.ext.PageRank.ranks(edges, 3)
-          .select(
-            when(col("node") % 2 === 0, lit("customer"))
-              .otherwise(lit("supplier")).as("kind"),
-            call_function("div", col("node"), lit(2L)).as("key"),
-            col("rank"))
+          .select(CustomerSupplier.kindKey(col("node")) :+ col("rank"): _*)
           .orderBy(col("rank").desc, col("kind"), col("key"))
           .limit(20)
       },
-      Some(s"""WITH e0 AS MATERIALIZED (SELECT DISTINCT CAST(o_custkey AS BIGINT) * 2 AS src,
-              |    CAST(l_suppkey AS BIGINT) * 2 + 1 AS dst
-              |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-              |edges AS MATERIALIZED (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
+      Some(s"""WITH ${CustomerSupplier.Sql.edges("edges")},
               |${graft.ext.PageRank.Sql.rounds(3)}
-              |SELECT CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END AS kind,
-              |  node // 2 AS key, rank
+              |SELECT ${CustomerSupplier.Sql.kindKey("node")}, rank
               |FROM r3 ORDER BY rank DESC, kind, key LIMIT 20""".stripMargin)),
 
     // ----- PERSONALIZED PageRank over the same purchase graph
@@ -2295,34 +2236,20 @@ object ParityQueries {
     QueryDef(
       "g4_ppr_seeds",
       (s, d) => {
-        val e0 = t(s, d, "orders")
-          .join(t(s, d, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-          .select((col("o_custkey").cast("long") * 2).as("src"),
-            (col("l_suppkey").cast("long") * 2 + 1).as("dst"))
-          .distinct()
-        val edges = e0.unionAll(
-          e0.select(col("dst").as("src"), col("src").as("dst")))
+        val edges = CustomerSupplier.edges(t(s, d, "orders"), t(s, d, "lineitem"))
         graft.ext.PageRank.personalizedRanks(edges,
             col("node") % 2 === 1 &&
               call_function("div", col("node"), lit(2L)) % 7 === 0,
             rounds = 3)
           .filter(col("rank") > 0)
-          .select(
-            when(col("node") % 2 === 0, lit("customer"))
-              .otherwise(lit("supplier")).as("kind"),
-            call_function("div", col("node"), lit(2L)).as("key"),
-            col("rank"))
+          .select(CustomerSupplier.kindKey(col("node")) :+ col("rank"): _*)
           .orderBy(col("rank").desc, col("kind"), col("key"))
           .limit(20)
       },
-      Some(s"""WITH e0 AS MATERIALIZED (SELECT DISTINCT CAST(o_custkey AS BIGINT) * 2 AS src,
-              |    CAST(l_suppkey AS BIGINT) * 2 + 1 AS dst
-              |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-              |edges AS MATERIALIZED (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
+      Some(s"""WITH ${CustomerSupplier.Sql.edges("edges")},
               |${graft.ext.PageRank.Sql.personalizedRounds(3,
                   "node % 2 = 1 AND (node // 2) % 7 = 0")}
-              |SELECT CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END AS kind,
-              |  node // 2 AS key, rank
+              |SELECT ${CustomerSupplier.Sql.kindKey("node")}, rank
               |FROM r3 WHERE rank > 0
               |ORDER BY rank DESC, kind, key LIMIT 20""".stripMargin)),
 
@@ -2507,24 +2434,14 @@ object ParityQueries {
     QueryDef(
       "g5_label_prop",
       (s, d) => {
-        val e0 = t(s, d, "orders")
-          .join(t(s, d, "lineitem").filter(col("l_quantity") > 47),
-            col("o_orderkey") === col("l_orderkey"))
-          .select((col("o_custkey").cast("long") * 2).as("src"),
-            (col("l_suppkey").cast("long") * 2 + 1).as("dst"))
-          .distinct()
-        val edges = e0.unionAll(
-          e0.select(col("dst").as("src"), col("src").as("dst")))
+        val edges = CustomerSupplier.edges(t(s, d, "orders"),
+          t(s, d, "lineitem").filter(col("l_quantity") > 47))
         graft.ext.LabelProp.labels(edges, 3)
           .groupBy("label").agg(count(lit(1)).as("size"))
           .groupBy("size").agg(count(lit(1)).as("n_communities"))
           .orderBy("size")
       },
-      Some(s"""WITH e0 AS MATERIALIZED (SELECT DISTINCT CAST(o_custkey AS BIGINT) * 2 AS src,
-              |    CAST(l_suppkey AS BIGINT) * 2 + 1 AS dst
-              |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-              |  WHERE l_quantity > 47),
-              |edges AS MATERIALIZED (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
+      Some(s"""WITH ${CustomerSupplier.Sql.edges("edges", Some("l_quantity > 47"))},
               |${graft.ext.LabelProp.Sql.rounds(3)}
               |SELECT size, count(*)::BIGINT AS n_communities
               |FROM (SELECT label, count(*)::BIGINT AS size FROM l3 GROUP BY 1)
@@ -2651,14 +2568,8 @@ object ParityQueries {
     QueryDef(
       "g18_modularity",
       (s, d) => {
-        val e0 = t(s, d, "orders")
-          .join(t(s, d, "lineitem").filter(col("l_quantity") > 47),
-            col("o_orderkey") === col("l_orderkey"))
-          .select((col("o_custkey").cast("long") * 2).as("src"),
-            (col("l_suppkey").cast("long") * 2 + 1).as("dst"))
-          .distinct()
-        val edges = tracked(e0.unionAll(
-          e0.select(col("dst").as("src"), col("src").as("dst"))))
+        val edges = tracked(CustomerSupplier.edges(t(s, d, "orders"),
+          t(s, d, "lineitem").filter(col("l_quantity") > 47)))
         val lab = tracked(graft.ext.LabelProp.labels(edges, 3))
         val arcs = edges
           .join(lab.select(col("node").as("src"), col("label").as("ls")),
@@ -2681,11 +2592,7 @@ object ParityQueries {
               / (col("m2").cast("double") * col("m2").cast("double")), 6)
               .as("modularity"))
       },
-      Some(s"""WITH e0 AS MATERIALIZED (SELECT DISTINCT CAST(o_custkey AS BIGINT) * 2 AS src,
-              |    CAST(l_suppkey AS BIGINT) * 2 + 1 AS dst
-              |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-              |  WHERE l_quantity > 47),
-              |edges AS MATERIALIZED (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
+      Some(s"""WITH ${CustomerSupplier.Sql.edges("edges", Some("l_quantity > 47"))},
               |${graft.ext.LabelProp.Sql.rounds(3)},
               |arcs AS MATERIALIZED (SELECT ls.label AS ls, ld.label AS ld
               |  FROM edges e
@@ -2801,13 +2708,7 @@ object ParityQueries {
     QueryDef(
       "g9_seed_harmonic",
       (s, d) => {
-        val e0 = t(s, d, "orders")
-          .join(t(s, d, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-          .select((col("o_custkey").cast("long") * 2).as("src"),
-            (col("l_suppkey").cast("long") * 2 + 1).as("dst"))
-          .distinct()
-        val edges = tracked(e0.unionAll(
-          e0.select(col("dst").as("src"), col("src").as("dst"))))
+        val edges = tracked(CustomerSupplier.edges(t(s, d, "orders"), t(s, d, "lineitem")))
         val seeds = edges.select(col("src").as("seed")).distinct()
           .filter(col("seed") % 2 === 1 &&
             call_function("div", col("seed"), lit(2L)) % 7 === 0)
@@ -2824,19 +2725,12 @@ object ParityQueries {
           .filter(col("node") =!= col("seed"))
           .groupBy("node").agg(sum("pts").as("harmonic2"),
             count(lit(1)).as("n_seeds_reached"))
-          .select(
-            when(col("node") % 2 === 0, lit("customer"))
-              .otherwise(lit("supplier")).as("kind"),
-            call_function("div", col("node"), lit(2L)).as("key"),
-            col("harmonic2"), col("n_seeds_reached"))
+          .select(CustomerSupplier.kindKey(col("node")) ++
+            Seq(col("harmonic2"), col("n_seeds_reached")): _*)
           .orderBy(col("harmonic2").desc, col("kind"), col("key"))
           .limit(20)
       },
-      Some("""WITH e0 AS (SELECT DISTINCT CAST(o_custkey AS BIGINT) * 2 AS src,
-             |    CAST(l_suppkey AS BIGINT) * 2 + 1 AS dst
-             |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-             |e AS (SELECT src, dst FROM e0
-             |  UNION ALL SELECT dst, src FROM e0),
+      Some(s"""WITH ${CustomerSupplier.Sql.edges("e")},
              |seeds AS (SELECT DISTINCT src AS seed FROM e
              |  WHERE src % 2 = 1 AND (src // 2) % 7 = 0),
              |r1 AS (SELECT DISTINCT s.seed, e.dst AS node
@@ -2849,9 +2743,7 @@ object ParityQueries {
              |  SELECT r2.seed, r2.node, 1 FROM r2
              |  LEFT JOIN r1 ON r2.seed = r1.seed AND r2.node = r1.node
              |  WHERE r1.node IS NULL AND r2.node <> r2.seed)
-             |SELECT CASE WHEN node % 2 = 0 THEN 'customer'
-             |    ELSE 'supplier' END AS kind,
-             |  node // 2 AS key,
+             |SELECT ${CustomerSupplier.Sql.kindKey("node")},
              |  CAST(sum(pts) AS BIGINT) AS harmonic2,
              |  count(*) AS n_seeds_reached
              |FROM sc GROUP BY node
@@ -2870,13 +2762,7 @@ object ParityQueries {
     QueryDef(
       "g10_assortativity",
       (s, d) => {
-        val e0 = t(s, d, "orders")
-          .join(t(s, d, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-          .select((col("o_custkey").cast("long") * 2).as("src"),
-            (col("l_suppkey").cast("long") * 2 + 1).as("dst"))
-          .distinct()
-        val edges = tracked(e0.unionAll(
-          e0.select(col("dst").as("src"), col("src").as("dst"))))
+        val edges = tracked(CustomerSupplier.edges(t(s, d, "orders"), t(s, d, "lineitem")))
         val deg = edges.groupBy(col("src").as("node"))
           .agg(count(lit(1)).as("dg"))
         val st = edges
@@ -2895,10 +2781,7 @@ object ParityQueries {
               sqrt(col("d1").cast("double") * col("d2").cast("double")), 6)
               .as("assortativity"))
       },
-      Some("""WITH e0 AS (SELECT DISTINCT CAST(o_custkey AS BIGINT) * 2 AS src,
-             |    CAST(l_suppkey AS BIGINT) * 2 + 1 AS dst
-             |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-             |e AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
+      Some(s"""WITH ${CustomerSupplier.Sql.edges("e")},
              |deg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS dg
              |  FROM e GROUP BY 1),
              |st AS (SELECT CAST(count(*) AS BIGINT) AS m,
@@ -2940,11 +2823,7 @@ object ParityQueries {
     QueryDef(
       "g11_rich_club",
       (s, d) => {
-        val e0 = t(s, d, "orders")
-          .join(t(s, d, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-          .select((col("o_custkey").cast("long") * 2).as("src"),
-            (col("l_suppkey").cast("long") * 2 + 1).as("dst"))
-          .distinct()
+        val e0 = CustomerSupplier.arcs(t(s, d, "orders"), t(s, d, "lineitem"))
         val edges = tracked(e0)
         val deg = tracked(edges.select(col("src").as("node"))
           .unionAll(edges.select(col("dst").as("node")))
@@ -2989,9 +2868,7 @@ object ParityQueries {
               (col("nn").cast("double") * (col("nn") - 1L).cast("double")), 6)
               .as("graph_density"))
       },
-      Some("""WITH e AS (SELECT DISTINCT CAST(o_custkey AS BIGINT) * 2 AS src,
-             |    CAST(l_suppkey AS BIGINT) * 2 + 1 AS dst
-             |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
+      Some(s"""WITH ${CustomerSupplier.Sql.arcs("e")},
              |deg AS (SELECT node, CAST(count(*) AS BIGINT) AS dg FROM (
              |  SELECT src AS node FROM e UNION ALL SELECT dst FROM e)
              |  GROUP BY 1),
@@ -5104,10 +4981,8 @@ object ParityQueries {
     QueryDef(
       "g13_sssp",
       (s, d) => {
-        val e0 = tracked(t(s, d, "orders")
-          .join(t(s, d, "lineitem"), col("o_orderkey") === col("l_orderkey"))
-          .groupBy((col("o_custkey").cast("long") * 2).as("u"),
-            (col("l_suppkey").cast("long") * 2 + 1).as("v"))
+        val e0 = tracked(CustomerSupplier.lines(t(s, d, "orders"), t(s, d, "lineitem"))
+          .groupBy(CustomerSupplier.customer.as("u"), CustomerSupplier.supplier.as("v"))
           .agg(min(round(col("l_extendedprice") * 100).cast("long"))
             .as("w")))
         val edges = e0.unionAll(
@@ -5119,18 +4994,15 @@ object ParityQueries {
         dist.crossJoin(broadcast(e0.agg(min("u").as("__s"))))
           .filter(col("node") =!= col("__s"))
           .crossJoin(broadcast(n))
-          .select(
-            when(col("node") % 2 === 0, lit("customer"))
-              .otherwise(lit("supplier")).as("kind"),
-            call_function("div", col("node"), lit(2L)).as("key"),
-            col("dist"), col("n_reached"), col("node"))
+          .select(CustomerSupplier.kindKey(col("node")) ++
+            Seq(col("dist"), col("n_reached"), col("node")): _*)
           .orderBy(col("dist"), col("node"))
           .limit(20)
           .drop("node")
       },
       Some(s"""WITH e0 AS MATERIALIZED (
-             |  SELECT CAST(o_custkey AS BIGINT)*2 AS u,
-             |    CAST(l_suppkey AS BIGINT)*2+1 AS v,
+             |  SELECT ${CustomerSupplier.Sql.customer} AS u,
+             |    ${CustomerSupplier.Sql.supplier} AS v,
              |    CAST(min(CAST(round(l_extendedprice*100) AS BIGINT))
              |      AS BIGINT) AS w
              |  FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
@@ -5141,9 +5013,7 @@ object ParityQueries {
              |seed AS (SELECT min(u) AS s FROM e0),
              |d0 AS (SELECT s AS node, 0::BIGINT AS dist FROM seed),
              |${graft.ext.Sssp.Sql.rounds(4)}
-             |SELECT CASE WHEN node % 2 = 0 THEN 'customer'
-             |    ELSE 'supplier' END AS kind,
-             |  node // 2 AS key, dist,
+             |SELECT ${CustomerSupplier.Sql.kindKey("node")}, dist,
              |  (SELECT CAST(count(*) AS BIGINT) FROM d4) AS n_reached
              |FROM d4 WHERE node != (SELECT s FROM seed)
              |ORDER BY dist, node LIMIT 20""".stripMargin)),
@@ -7152,12 +7022,7 @@ object ParityQueries {
          |          CAST(count(*) AS BIGINT) AS nz
          |        FROM r$k GROUP BY 1))""".stripMargin
     }.mkString(",\n")
-    s"""WITH e0 AS MATERIALIZED (
-       |  SELECT DISTINCT CAST(o_custkey AS BIGINT) * 2 AS src,
-       |    CAST(l_suppkey AS BIGINT) * 2 + 1 AS dst
-       |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-       |e AS MATERIALIZED (SELECT src, dst FROM e0
-       |  UNION ALL SELECT dst, src FROM e0),
+    s"""WITH ${CustomerSupplier.Sql.edges("e")},
        |nodes AS (SELECT DISTINCT src AS v FROM e),
        |h0 AS (SELECT v,
        |  ${graft.ext.NearDup.Sql.charHashSql("CAST(v AS VARCHAR)")} AS h
@@ -7178,18 +7043,35 @@ object ParityQueries {
        |ORDER BY r""".stripMargin
   }
 
+  /** DuckDB mirror for scd2_history, the full SCD2 rebuild: an order
+    * opens a version when its priority differs from the customer's
+    * previous one; each version is valid until the next opens.
+    */
+  private def scd2HistorySql: String =
+    """WITH log AS (SELECT * FROM orders WHERE o_custkey % 100 = 0),
+      |changes AS (SELECT * FROM (
+      |  SELECT o_custkey, o_orderpriority, o_orderdate, o_orderkey,
+      |    lag(o_orderpriority) OVER (PARTITION BY o_custkey
+      |      ORDER BY o_orderdate, o_orderkey) AS prev
+      |  FROM log)
+      |  WHERE prev IS NULL OR prev <> o_orderpriority)
+      |SELECT o_custkey AS custkey, o_orderpriority AS priority,
+      |  o_orderdate AS valid_from,
+      |  lead(o_orderdate) OVER (PARTITION BY o_custkey
+      |    ORDER BY o_orderdate, o_orderkey) AS valid_to,
+      |  lead(o_orderdate) OVER (PARTITION BY o_custkey
+      |    ORDER BY o_orderdate, o_orderkey) IS NULL AS is_current,
+      |  row_number() OVER (PARTITION BY o_custkey
+      |    ORDER BY o_orderdate, o_orderkey)::BIGINT AS version
+      |FROM changes ORDER BY custkey, version""".stripMargin
+
   /** DuckDB mirror for g21: identical bipartite edges + pinned pivot
     * rule, then [[graft.ext.Stress.Sql.rounds]] unrolls the same 4
     * level-synchronized σ-BFS rounds; the stress join replays the
     * σ(s,v)·σ(v,t) pairing against the pivot-pair distances.
     */
   private def stressSql: String =
-    s"""WITH e0 AS MATERIALIZED (
-       |  SELECT DISTINCT CAST(o_custkey AS BIGINT) * 2 AS src,
-       |    CAST(l_suppkey AS BIGINT) * 2 + 1 AS dst
-       |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-       |e AS MATERIALIZED (SELECT src, dst FROM e0
-       |  UNION ALL SELECT dst, src FROM e0),
+    s"""WITH ${CustomerSupplier.Sql.edges("e")},
        |seeds AS (SELECT DISTINCT src AS seed FROM e
        |  WHERE src % 2 = 1 AND src < 16),
        |p0 AS MATERIALIZED (SELECT seed, seed AS node,
@@ -7204,7 +7086,6 @@ object ParityQueries {
        |  JOIN dst ON dst.s = a.seed AND dst.t = b.seed
        |  WHERE a.d + b.d = dst.dst_d AND a.node <> a.seed AND a.node <> b.seed
        |  GROUP BY 1)
-       |SELECT CASE WHEN v % 2 = 0 THEN 'customer' ELSE 'supplier' END AS kind,
-       |  v // 2 AS key, stress, n_pairs
+       |SELECT ${CustomerSupplier.Sql.kindKey("v")}, stress, n_pairs
        |FROM stress ORDER BY stress DESC, kind, key LIMIT 20""".stripMargin
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.ext.{Dedup, TextAnalysis}
+import graft.ext.{Dedup, QualityClassifier, TextAnalysis}
 
 /** Text-analysis + exact-dedup query surface over `documents`
   * (the north-star LLM-pipeline operators; round-1 verdict items 1-2).
@@ -371,16 +371,8 @@ object TextQueries {
     QueryDef(
       "tx28_eval_metrics",
       (s, d) => {
-        val base = docs(s, d)
-          .withColumn("__toks", TextAnalysis.tokens(col("text")))
-          .select(col("doc_id"),
-            graft.ext.QualityClassifier.scoreParts(
-              size(col("__toks")), size(array_distinct(col("__toks"))),
-              TextAnalysis.wordFreqs(col("__toks"),
-                graft.ext.QualityClassifier.featureWords)).as("score"),
-            TextAnalysis.qualityScoreTokens(col("__toks")).as("q"))
-        val med = base.agg(expr("percentile(q, 0.5)").as("__med"))
-        val c = base.crossJoin(broadcast(med))
+        val base = QualityClassifier.scoreAndQuality(docs(s, d))
+        val c = QualityClassifier.withQualityMedian(base)
           .select((col("score") > 0).as("pred"),
             (col("q") > col("__med")).as("label"))
           .agg(
@@ -398,11 +390,7 @@ object TextQueries {
           round((col("tp") + col("tn")).cast("double") /
             (col("tp") + col("fp") + col("fn") + col("tn")), 6).as("accuracy"))
       },
-      Some(s"""WITH t AS (SELECT doc_id,
-              |    ${graft.ext.QualityClassifier.Sql.scoreSql} AS score,
-              |    ${TS.qualityScore} AS q
-              |  FROM documents),
-              |med AS (SELECT quantile_cont(q, 0.5) AS m FROM t),
+      Some(s"""WITH ${QualityClassifier.Sql.scoreAndQuality("t")},
               |c AS (SELECT
               |  CAST(sum(CASE WHEN pred AND label THEN 1 ELSE 0 END) AS BIGINT) AS tp,
               |  CAST(sum(CASE WHEN pred AND NOT label THEN 1 ELSE 0 END) AS BIGINT) AS fp,
@@ -433,17 +421,9 @@ object TextQueries {
     QueryDef(
       "tx29_calibration",
       (s, d) => {
-        val base = docs(s, d)
-          .withColumn("__toks", TextAnalysis.tokens(col("text")))
-          .select(col("doc_id"),
-            graft.ext.QualityClassifier.scoreParts(
-              size(col("__toks")), size(array_distinct(col("__toks"))),
-              TextAnalysis.wordFreqs(col("__toks"),
-                graft.ext.QualityClassifier.featureWords)).as("score"),
-            TextAnalysis.qualityScoreTokens(col("__toks")).as("q"))
-        val med = base.agg(expr("percentile(q, 0.5)").as("__med"))
+        val base = QualityClassifier.scoreAndQuality(docs(s, d))
         val ext = base.agg(min("score").as("__lo"), max("score").as("__hi"))
-        base.crossJoin(broadcast(med)).crossJoin(broadcast(ext))
+        QualityClassifier.withQualityMedian(base).crossJoin(broadcast(ext))
           .filter(col("__hi") > col("__lo"))
           .select(
             least(floor((col("score") - col("__lo")) * 10.0 /
@@ -457,11 +437,7 @@ object TextQueries {
             round(col("n_pos").cast("double") / col("n"), 6))
           .orderBy("bucket")
       },
-      Some(s"""WITH t AS (SELECT doc_id,
-              |    ${graft.ext.QualityClassifier.Sql.scoreSql} AS score,
-              |    ${TS.qualityScore} AS q
-              |  FROM documents),
-              |med AS (SELECT quantile_cont(q, 0.5) AS m FROM t),
+      Some(s"""WITH ${QualityClassifier.Sql.scoreAndQuality("t")},
               |ext AS (SELECT min(score) AS lo, max(score) AS hi FROM t)
               |SELECT CAST(least(floor((score - (SELECT lo FROM ext)) * 10.0 /
               |    ((SELECT hi FROM ext) - (SELECT lo FROM ext))), 9.0) AS BIGINT) AS bucket,
@@ -981,9 +957,9 @@ object TextQueries {
           size(col("__toks")).as("__ntok"),
           size(array_distinct(col("__toks"))).as("__ndis"),
           TextAnalysis.wordFreqs(col("__toks"),
-            graft.ext.QualityClassifier.featureWords).as("__freqs"))
+            QualityClassifier.featureWords).as("__freqs"))
         .select(col("source"),
-          graft.ext.QualityClassifier.scoreParts(
+          QualityClassifier.scoreParts(
             col("__ntok"), col("__ndis"), col("__freqs")).as("score"))
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"),
@@ -995,7 +971,7 @@ object TextQueries {
               |  CAST(sum(CASE WHEN score > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_pass,
               |  round(min(score), 6) AS min_score,
               |  round(max(score), 6) AS max_score
-              |FROM (SELECT source, ${graft.ext.QualityClassifier.Sql.scoreSql} AS score
+              |FROM (SELECT source, ${QualityClassifier.Sql.scoreSql} AS score
               |      FROM documents)
               |GROUP BY 1 ORDER BY source""".stripMargin)),
 
@@ -2344,17 +2320,9 @@ object TextQueries {
       "tx38_isotonic_calibration",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        val base = docs(s, d)
-          .withColumn("__toks", TextAnalysis.tokens(col("text")))
-          .select(col("doc_id"),
-            graft.ext.QualityClassifier.scoreParts(
-              size(col("__toks")), size(array_distinct(col("__toks"))),
-              TextAnalysis.wordFreqs(col("__toks"),
-                graft.ext.QualityClassifier.featureWords)).as("score"),
-            TextAnalysis.qualityScoreTokens(col("__toks")).as("q"))
-        val med = base.agg(expr("percentile(q, 0.5)").as("__med"))
+        val base = QualityClassifier.scoreAndQuality(docs(s, d))
         val ext = base.agg(min("score").as("__lo"), max("score").as("__hi"))
-        val agg = base.crossJoin(broadcast(med)).crossJoin(broadcast(ext))
+        val agg = QualityClassifier.withQualityMedian(base).crossJoin(broadcast(ext))
           .filter(col("__hi") > col("__lo"))
           .select(
             least(floor((col("score") - col("__lo")) * 10.0 /
@@ -2392,11 +2360,7 @@ object TextQueries {
             round(col("iso"), 6).as("iso_rate"))
           .orderBy("bucket")
       },
-      Some(s"""WITH t AS (SELECT doc_id,
-              |    ${graft.ext.QualityClassifier.Sql.scoreSql} AS score,
-              |    ${TS.qualityScore} AS q
-              |  FROM documents),
-              |med AS (SELECT quantile_cont(q, 0.5) AS m FROM t),
+      Some(s"""WITH ${QualityClassifier.Sql.scoreAndQuality("t")},
               |ext AS (SELECT min(score) AS lo, max(score) AS hi FROM t),
               |agg AS (SELECT CAST(least(floor((score - (SELECT lo FROM ext))
               |      * 10.0 /
@@ -2503,16 +2467,8 @@ object TextQueries {
     QueryDef(
       "tx40_cohens_kappa",
       (s, d) => {
-        val base = docs(s, d)
-          .withColumn("__toks", TextAnalysis.tokens(col("text")))
-          .select(
-            graft.ext.QualityClassifier.scoreParts(
-              size(col("__toks")), size(array_distinct(col("__toks"))),
-              TextAnalysis.wordFreqs(col("__toks"),
-                graft.ext.QualityClassifier.featureWords)).as("score"),
-            TextAnalysis.qualityScoreTokens(col("__toks")).as("q"))
-        val med = base.agg(expr("percentile(q, 0.5)").as("__med"))
-        val cells = base.crossJoin(broadcast(med))
+        val base = QualityClassifier.scoreAndQuality(docs(s, d))
+        val cells = QualityClassifier.withQualityMedian(base)
           .select(when(col("score") > 0, 1L).otherwise(0L).as("r1"),
             when(col("q") > col("__med"), 1L).otherwise(0L).as("r2"))
           .agg(count(lit(1)).as("n"),
@@ -2534,11 +2490,7 @@ object TextQueries {
               (col("n") * col("n") - col("pe_num")).cast("double"), 6)
               .as("kappa"))
       },
-      Some(s"""WITH base AS (SELECT
-              |    ${graft.ext.QualityClassifier.Sql.scoreSql} AS score,
-              |    ${TS.qualityScore} AS q
-              |  FROM documents),
-              |med AS (SELECT quantile_cont(q, 0.5) AS m FROM base),
+      Some(s"""WITH ${QualityClassifier.Sql.scoreAndQuality("t")},
               |cells AS (SELECT
               |    CAST(count(*) AS BIGINT) AS n,
               |    CAST(sum(CASE WHEN score > 0 AND q > (SELECT m FROM med)
@@ -2549,7 +2501,7 @@ object TextQueries {
               |      THEN 1 ELSE 0 END) AS BIGINT) AS c,
               |    CAST(sum(CASE WHEN score <= 0 AND q <= (SELECT m FROM med)
               |      THEN 1 ELSE 0 END) AS BIGINT) AS d
-              |  FROM base)
+              |  FROM t)
               |SELECT n, a, b, c, d,
               |  round(CAST(n * (a + d) - ((a + b) * (a + c) + (c + d) * (b + d))
               |      AS DOUBLE) /
@@ -2662,16 +2614,8 @@ object TextQueries {
     QueryDef(
       "tx43_auc_exact",
       (s, d) => {
-        val base = docs(s, d)
-          .withColumn("__toks", TextAnalysis.tokens(col("text")))
-          .select(
-            graft.ext.QualityClassifier.scoreParts(
-              size(col("__toks")), size(array_distinct(col("__toks"))),
-              TextAnalysis.wordFreqs(col("__toks"),
-                graft.ext.QualityClassifier.featureWords)).as("score"),
-            TextAnalysis.qualityScoreTokens(col("__toks")).as("q"))
-        val med = base.agg(expr("percentile(q, 0.5D)").as("__med"))
-        val xs = base.crossJoin(broadcast(med))
+        val base = QualityClassifier.scoreAndQuality(docs(s, d))
+        val xs = QualityClassifier.withQualityMedian(base)
           .select(expr("CAST(round(score * 1000000) AS BIGINT)").as("x"),
             when(col("q") > col("__med"), 1L).otherwise(0L).as("g1"))
         val grid = xs.groupBy("x")
@@ -2688,11 +2632,7 @@ object TextQueries {
               / (lit(2.0) * (col("n1") * col("n0")).cast("double")), 6)
               .as("auc"))
       },
-      Some(s"""WITH t AS (SELECT doc_id,
-             |    ${graft.ext.QualityClassifier.Sql.scoreSql} AS score,
-             |    ${TS.qualityScore} AS q
-             |  FROM documents),
-             |med AS (SELECT quantile_cont(q, 0.5) AS m FROM t),
+      Some(s"""WITH ${QualityClassifier.Sql.scoreAndQuality("t")},
              |xs AS (SELECT CAST(round(score * 1000000) AS BIGINT) AS x,
              |    CASE WHEN q > (SELECT m FROM med) THEN 1 ELSE 0 END AS g1
              |  FROM t),
@@ -2837,16 +2777,8 @@ object TextQueries {
     QueryDef(
       "tx48_brier_decomp",
       (s, d) => {
-        val base = docs(s, d)
-          .withColumn("__toks", TextAnalysis.tokens(col("text")))
-          .select(
-            graft.ext.QualityClassifier.scoreParts(
-              size(col("__toks")), size(array_distinct(col("__toks"))),
-              TextAnalysis.wordFreqs(col("__toks"),
-                graft.ext.QualityClassifier.featureWords)).as("score"),
-            TextAnalysis.qualityScoreTokens(col("__toks")).as("q"))
-        val med = base.agg(expr("percentile(q, 0.5D)").as("__med"))
-        val py = base.crossJoin(broadcast(med))
+        val base = QualityClassifier.scoreAndQuality(docs(s, d))
+        val py = QualityClassifier.withQualityMedian(base)
           .select(expr("CAST(round((0.5 + score / (2.0 * (1.0 + abs(score))))" +
             " * 1000000) AS BIGINT)").as("x"),
             when(col("q") > col("__med"), 1L).otherwise(0L).as("y"))
@@ -2881,11 +2813,7 @@ object TextQueries {
             round(col("srel") / nnD - col("sres") / nnD +
               yyD / nnD * (lit(1.0) - yyD / nnD), 6).as("brier"))
       },
-      Some(s"""WITH t AS (SELECT doc_id,
-             |    ${graft.ext.QualityClassifier.Sql.scoreSql} AS score,
-             |    ${TS.qualityScore} AS q
-             |  FROM documents),
-             |med AS (SELECT quantile_cont(q, 0.5) AS m FROM t),
+      Some(s"""WITH ${QualityClassifier.Sql.scoreAndQuality("t")},
              |py AS (SELECT CAST(round((0.5 + score / (2.0 * (1.0
              |      + abs(score)))) * 1000000) AS BIGINT) AS x,
              |    CASE WHEN q > (SELECT m FROM med) THEN 1 ELSE 0 END AS y
@@ -2948,13 +2876,12 @@ object TextQueries {
     QueryDef(
       "tx49_gini_features",
       (s, d) => {
-        val words = graft.ext.QualityClassifier.featureWords
+        val words = QualityClassifier.featureWords
         val base = docs(s, d)
           .withColumn("__toks", TextAnalysis.tokens(col("text")))
           .select(TextAnalysis.wordFreqs(col("__toks"), words).as("fr"),
             TextAnalysis.qualityScoreTokens(col("__toks")).as("q"))
-        val med = base.agg(expr("percentile(q, 0.5D)").as("__med"))
-        val py = base.crossJoin(broadcast(med))
+        val py = QualityClassifier.withQualityMedian(base)
           .select(col("fr"),
             when(col("q") > col("__med"), 1L).otherwise(0L).as("y"))
         val st = py
@@ -2981,14 +2908,14 @@ object TextQueries {
           .orderBy(col("gain").desc, col("w"))
       },
       Some {
-        val words = graft.ext.QualityClassifier.featureWords
+        val words = QualityClassifier.featureWords
         val arms = words.map(w =>
           s"""SELECT '$w' AS w,
              |  CAST(CASE WHEN ${TS.wordCount(w)} > 0 THEN 1 ELSE 0 END
              |    AS BIGINT) AS pres, y FROM py""".stripMargin)
           .mkString("\n  UNION ALL\n  ")
         s"""WITH t AS (SELECT text, ${TS.qualityScore} AS q FROM documents),
-           |med AS (SELECT quantile_cont(q, 0.5) AS m FROM t),
+           |${QualityClassifier.Sql.qualityMedian("t")},
            |py AS (SELECT text,
            |    CASE WHEN q > (SELECT m FROM med) THEN 1 ELSE 0 END AS y
            |  FROM t),

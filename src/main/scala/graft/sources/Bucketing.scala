@@ -20,10 +20,12 @@ object Bucketing {
 
   /** Write `df` as a bucketed, sorted catalog table (overwrites).
     *
-    * The session catalog is in-memory but managed-table DIRECTORIES
-    * persist in the warehouse path across JVMs — a fresh session that
-    * re-creates the same table name would hit LOCATION_ALREADY_EXISTS,
-    * so any stale location is removed first.
+    * The session catalog is in-memory, but a managed table's DIRECTORY
+    * can outlive its catalog entry: a JVM killed before its shutdown
+    * hook leaves its warehouse behind, and a later JVM with the same
+    * pid gets the same warehouse path (`Sessions.warehouseDir`). A
+    * session that re-creates the table name there would hit
+    * LOCATION_ALREADY_EXISTS, so any stale location is removed first.
     */
   def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit = {
     // the stale-location cleanup below derives warehousePath/<table>,

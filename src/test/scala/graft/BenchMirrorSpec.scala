@@ -10,8 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Round-11 additions: the in-run load sentinel (verdict ask 2 — the
   * jitter class fired in r8, r9, AND r10, each time costing a full
-  * DevMoverAttrib cycle). A pinned control query is interleaved
-  * through every tier; classifyAlarms marks an alarm whose tier's
+  * interleaved attribution cycle). A pinned control query is
+  * interleaved through every tier; classifyAlarms marks an alarm whose tier's
   * control median drifted ≥1.8× the cross-run baseline as
   * `run_level_load` AT ALARM TIME — encoded against the literal r10
   * incident (four alarms at a common ~4.4× in a run whose wall was

@@ -69,18 +69,8 @@ class CoPurchaseSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("source scan: only CoPurchase builds the oriented part self-join") {
-    import scala.jdk.CollectionConverters._
-    val base = java.nio.file.Paths.get("src/main/scala/graft")
     val oriented = """a\.pk("\))?\s*<\s*(col\(")?b\.pk""".r
-    val files = java.nio.file.Files.walk(base)
-    val hits = try {
-      files.iterator().asScala
-        .filter(p => p.toString.endsWith(".scala")
-          && base.relativize(p).toString != "ops/CoPurchase.scala")
-        .filter(p => oriented.findFirstIn(
-          new String(java.nio.file.Files.readAllBytes(p), "UTF-8")).isDefined)
-        .map(base.relativize(_).toString).toList
-    } finally files.close()
+    val hits = SourceScan.copiesOutside("ops/CoPurchase.scala", oriented)
     assert(hits.isEmpty, s"co-purchase self-join built outside CoPurchase: $hits")
   }
 }

@@ -55,6 +55,41 @@ class QualityClassifierSpec extends SparkSpec {
     }
   }
 
+  test("the evaluation base matches the driver-side score, q and median") {
+    val docs = graft.sources.Tables.table(spark, FitDir, "documents")
+    val got = QualityClassifier.withQualityMedian(QualityClassifier.scoreAndQuality(docs))
+      .select("score", "q", "__med").collect()
+    val want = docs
+      .withColumn("__toks", TextAnalysis.tokens(col("text")))
+      .select(size(col("__toks")), size(array_distinct(col("__toks"))),
+        TextAnalysis.wordFreqs(col("__toks"), QualityClassifier.featureWords),
+        TextAnalysis.qualityScoreTokens(col("__toks")))
+      .collect().map { r =>
+        val xs = QualityClassifier.featuresOf(
+          r.getInt(0).toLong, r.getInt(1).toLong, r.getSeq[Long](2))
+        (QualityClassifier.scoreOf(xs, QualityClassifierModel.weights), r.getDouble(3))
+      }
+    def bits(pairs: Seq[(Double, Double)]) = pairs.map { case (a, b) =>
+      (java.lang.Double.doubleToRawLongBits(a), java.lang.Double.doubleToRawLongBits(b))
+    }.sorted
+    assert(got.nonEmpty &&
+      bits(got.map(r => (r.getDouble(0), r.getDouble(1)))) == bits(want))
+    // Spark's percentile: linear interpolation at rank (n - 1) / 2
+    val qs = want.map(_._2).sorted
+    val pos = (qs.length - 1) * 0.5
+    val (lo, hi) = (pos.floor.toInt, pos.ceil.toInt)
+    val median =
+      if (qs(lo) == qs(hi)) qs(lo) else (hi - pos) * qs(lo) + (pos - lo) * qs(hi)
+    assert(got.forall(_.getDouble(2) == median))
+  }
+
+  test("source scan: only QualityClassifier builds the score-vs-median base") {
+    // tx20 serves the score alone, over parts bound in their own projection
+    val shape = """percentile\(q\b|quantile_cont\(q\b|scoreParts\(\s*size\(""".r
+    val hits = SourceScan.copiesOutside("ext/QualityClassifier.scala", shape)
+    assert(hits.isEmpty, s"score-vs-median base built outside QualityClassifier: $hits")
+  }
+
   test("gate discriminates on the fit corpus (labels were its quality median)") {
     val out = SparkEntry.queries("tx20_classifier_gate")(spark, FitDir).collect()
     val (nDocs, nPass) = (out.map(_.getLong(1)).sum, out.map(_.getLong(2)).sum)
