@@ -89,9 +89,11 @@ object QualityClassifier {
   def scoreAndQuality(docs: DataFrame): DataFrame =
     docs.withColumn("__toks", TextAnalysis.tokens(col("text")))
       .select(
-        scoreParts(size(col("__toks")), size(array_distinct(col("__toks"))),
-          TextAnalysis.wordFreqs(col("__toks"), featureWords)).as("score"),
+        size(col("__toks")).as("__ntok"),
+        size(array_distinct(col("__toks"))).as("__ndis"),
+        TextAnalysis.wordFreqs(col("__toks"), featureWords).as("__freqs"),
         TextAnalysis.qualityScoreTokens(col("__toks")).as("q"))
+      .select(scoreParts(col("__ntok"), col("__ndis"), col("__freqs")).as("score"), col("q"))
 
   /** `frame` (which has a `q` column) with `__med`, the corpus median
     * of `q`, joined on as a 1-row broadcast.

@@ -30,11 +30,14 @@ object SessionIslands {
   def withSid(ev: DataFrame, ts: String, order: Seq[Column], gap: Long,
       inclusive: Boolean): DataFrame = {
     val w = Window.partitionBy("user_id").orderBy(order: _*)
-    val prev = lag(ts, 1).over(w)
+    // `prev` is bound once, so the window computes one lag, not one per use
+    val prev = col("__prev")
     val step = col(ts) - prev
-    ev.withColumn("new_s",
+    ev.withColumn("__prev", lag(ts, 1).over(w))
+      .withColumn("new_s",
         when(if (inclusive) step >= gap else step > gap, 1L)
           .otherwise(when(prev.isNull, 1L).otherwise(0L)))
+      .drop("__prev")
       .withColumn("sid", sum("new_s").over(
         w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
   }

@@ -1,16 +1,27 @@
 package graft.sink
 
+import java.time.LocalDate
+import java.util.UUID
+
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.sql.{DataFrame, Row, SparkSession, classic}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 /** Sink abstraction replacing the reference's 8 MongoDB collections
   * (reset_database.py:18-27). The reference inserts row-at-a-time from
   * the driver (spark_streaming.py:102,...,197); here every write is a
-  * distributed DataFrame append — same semantics, no driver bottleneck
-  * (SURVEY §1.4, §4).
+  * DataFrame append — same semantics, no driver bottleneck (SURVEY
+  * §1.4, §4): data-sized tables are appended by executors, and only
+  * the few rows of a driver-resident frame are written by the driver.
   */
 trait SnapshotSink {
   /** Append one batch's rows to the named snapshot table. Rows are
@@ -31,11 +42,21 @@ trait SnapshotSink {
   * trailing-time-range queries (F4) prune partitions instead of
   * scanning history. At 100 TB of accumulated snapshots this is the
   * difference between reading a day and reading a year.
+  *
+  * The write path follows where the rows are. A distributed frame is
+  * appended by Spark's writer (a job, its task and job commit). A
+  * driver-resident frame (`Dataset.isLocal`: the pipeline's small
+  * snapshot tables, built from one collected aggregate) is written by
+  * the driver itself through the same parquet writer, one file per
+  * `batch_date`, which saves the job a handful of rows would otherwise
+  * pay. Readers cannot tell the two kinds of file apart.
   */
 final class ParquetSnapshotSink(root: String) extends SnapshotSink {
+  import ParquetSnapshotSink._
+
   override def write(table: String, df: DataFrame): Unit =
-    df.withColumn("batch_date",
-        to_date(timestamp_seconds(col("timestamp").cast("long"))))
+    if (df.isLocal) appendLocal(df, new Path(root, table))
+    else df.withColumn("batch_date", BatchDate)
       .write.mode("append").partitionBy("batch_date")
       .parquet(s"$root/$table")
 
@@ -54,6 +75,56 @@ final class ParquetSnapshotSink(root: String) extends SnapshotSink {
         to_date(timestamp_seconds(lit(math.floor(minEpochSeconds).toLong))))
       .filter(col("timestamp") >= minEpochSeconds)
       .drop("batch_date")
+}
+
+object ParquetSnapshotSink {
+
+  /** The partition column, derived from `timestamp` (epoch seconds) in
+    * the session time zone. Both write paths evaluate this one
+    * expression.
+    */
+  private val BatchDate = to_date(timestamp_seconds(col("timestamp").cast("long")))
+
+  /** Appends a driver-resident frame to the table at `dir` without a
+    * Spark job: one parquet file per `batch_date`, written by Spark's
+    * own parquet `OutputWriter` under the session's Hadoop conf and
+    * parquet settings, named as Spark's writer names its files. Each
+    * file is written under a hidden name (`.`-prefixed, which file
+    * listing skips) and renamed into place once closed, so a reader
+    * never sees a partial file and a failed write leaves nothing
+    * readable behind.
+    */
+  private def appendLocal(df: DataFrame, dir: Path): Unit = {
+    val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val dataSchema = df.schema
+    // the frame's rows are already on the driver; the batch_date
+    // projection over them plans to a local scan, so this runs no job
+    val rows = df.withColumn("batch_date", BatchDate)
+      .queryExecution.executedPlan.executeCollect()
+    val date = dataSchema.length
+    val dataRow = UnsafeProjection.create(dataSchema)
+    def dayOf(r: InternalRow): String =
+      if (r.isNullAt(date)) null else LocalDate.ofEpochDay(r.getInt(date).toLong).toString
+    rows.groupBy(dayOf).foreach { case (day, part) =>
+      val job = Job.getInstance(spark.sessionState.newHadoopConf())
+      val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, dataSchema)
+      val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+        new TaskAttemptID("graft", 0, TaskType.MAP, 0, 0))
+      val partDir = new Path(dir, ExternalCatalogUtils.getPartitionPathString("batch_date", day))
+      val name = s"part-00000-${UUID.randomUUID()}.c000${factory.getFileExtension(ctx)}"
+      val inProgress = new Path(partDir, s".$name.inprogress")
+      val fs = partDir.getFileSystem(job.getConfiguration)
+      try {
+        val writer = factory.newInstance(inProgress.toString, dataSchema, ctx)
+        try part.foreach(r => writer.write(dataRow(r))) finally writer.close()
+        require(fs.rename(inProgress, new Path(partDir, name)),
+          s"rename $inProgress into $partDir failed")
+      } catch { case e: Throwable =>
+        fs.delete(inProgress, false)
+        throw e
+      }
+    }
+  }
 }
 
 /** In-memory sink for deterministic tests — buffers rows per table on

@@ -4,9 +4,10 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 import graft.ops.{Derive, Grids, Stats}
 import graft.schema.CensusSchema
@@ -44,16 +45,25 @@ final case class PipelineConfig(
   * re-aggregates snapshots over time. No watermarks, no event-time
   * windows — adding them would change late-file behavior (T8).
   *
-  * Physics improved deliberately (SURVEY §4): a batch is persisted and
-  * aggregated in ONE grouping-sets pass — the global summary row plus
-  * the five count tables — and only the global row reaches the driver.
-  * That row gates emptiness (no row, no writes), supplies the z-score
-  * scalars and, through its min/max hours, decides whether any anomaly
-  * exists without a job. The 7-8 table writes then run concurrently,
-  * since each one is mostly commit-path fixed cost; every table but
-  * raw_data is coalesced to one file per batch, so the overlap does not
-  * multiply the files the dashboard lists. Raw rows and anomalies are
-  * written by executors instead of collected row-at-a-time.
+  * Physics improved deliberately (SURVEY §4): a fused batch runs 3
+  * Spark jobs, 2 when no row passes the anomaly cut.
+  *  - One job aggregates the persisted batch in ONE grouping-sets pass
+  *    (the global summary row plus the five count tables) and collects
+  *    the whole result, about 60 rows, through `Grids.boundedRows`.
+  *    The global row gates emptiness (no row, no writes), supplies the
+  *    z-score scalars and, through its min/max hours, decides whether
+  *    any anomaly exists without a job.
+  *  - summary_statistics and the five count tables are built from the
+  *    collected rows as driver-local frames, which
+  *    `ParquetSnapshotSink` writes from the driver without a job.
+  *  - raw_data and anomalies stay distributed: one write job each,
+  *    written by executors instead of collected row-at-a-time.
+  * The writes run concurrently, since each one is mostly fixed cost.
+  * `start` turns AQE off on the query's own session: the body has no
+  * join and its one shuffle carries the ~60 grouped rows, so AQE would
+  * only add a job for that shuffle stage and re-plan the result.
+  * In two-query mode each query runs the aggregation and its one
+  * distributed write (anomalies or raw_data): 2 jobs per batch.
   */
 final class Pipeline(sink: SnapshotSink, config: PipelineConfig = PipelineConfig()) {
   import Pipeline._
@@ -81,43 +91,41 @@ final class Pipeline(sink: SnapshotSink, config: PipelineConfig = PipelineConfig
       val aggregated = cached
         .groupingSets((Nil +: countSpecs.map(_.keys)).map(_.map(col)), KeyCols.map(col): _*)
         .agg(Aggs.head, Aggs.tail: _*)
-      // the small result persists as an RDD: a persisted Dataset would
-      // cost one more job, AQE materializing its cache as a query stage
-      val groupedRows = aggregated.rdd.persist()
-      val grouped = cached.sparkSession.createDataFrame(groupedRows, aggregated.schema)
-      try {
-        def rowsOf(keys: Seq[String]): DataFrame = grouped.filter(col("gid") === groupingId(keys))
-        def stamped(df: DataFrame): DataFrame = df.withColumn("timestamp", lit(ts))
-        val global = Grids.boundedRows(
-          rowsOf(Nil).select("avg_hours", "stddev_hours", "min_hours", "max_hours"),
-          1, "census_batch_global")
-        global.headOption.foreach { g =>
-          def num(i: Int): Double =
-            if (g.isNullAt(i)) Double.NaN else g.get(i).asInstanceOf[Number].doubleValue
-          val (mean, sd) = (num(0), num(1))
-          // W1/P6/F1-F3: the cut from the summary's own scalars; written
-          // only when some row is past it
-          def anomalies = Stats.zScoreCut(cached, "hours_per_week", mean, sd, config.zThreshold)
-            .withColumnRenamed("hours_per_week_z_score", "hours_z_score")
-            .withColumn("anomaly_type", lit("hours_outlier"))
-            .withColumn("z_score", col("hours_z_score"))
-            .withColumn("detected_at", lit(ts))
-            .drop("timestamp")
-            .withColumn("timestamp", lit(ts))
-            .coalesce(1)
-          val frames =
-            Seq("summary_statistics" ->
-              stamped(rowsOf(Nil).select(Summary.map(s => col(s._1)): _*)).coalesce(1)) ++
-            (if (Stats.anyPastCut(num(2), num(3), mean, sd, config.zThreshold))
-              Seq("anomalies" -> anomalies) else Nil) ++
-            countSpecs.map(t => t.table ->
-              stamped(rowsOf(t.keys).select((t.keys ++ t.values).map(col): _*)).coalesce(1)) :+
-            // X3: reference collects the full batch and insert_one's each
-            // row (spark_streaming.py:195-197); we append distributed.
-            ("raw_data" -> stamped(cached.drop("timestamp")))
-          writeConcurrently(sink, frames.filter { case (table, _) => tables.contains(table) })
-        }
-      } finally { groupedRows.unpersist(blocking = false); () }
+      val schema = aggregated.schema
+      val grouped = Grids.boundedRows(aggregated, GroupedRowCeiling, "census_batch_grouped")
+      def rowsOf(keys: Seq[String]): Seq[Row] = {
+        val id = groupingId(keys)
+        grouped.filter(_.getAs[Number]("gid").longValue == id).toSeq
+      }
+      // a small table as a driver-local frame: `cols` of `rows`, stamped
+      def local(rows: Seq[Row], cols: Seq[String]): DataFrame =
+        cached.sparkSession.createDataFrame(
+          rows.map(r => Row.fromSeq(cols.map(r.getAs[Any]) :+ ts)).asJava,
+          StructType(cols.map(schema(_)) :+ StructField("timestamp", DoubleType, nullable = false)))
+      rowsOf(Nil).headOption.foreach { g =>
+        def num(c: String): Double =
+          if (g.isNullAt(g.fieldIndex(c))) Double.NaN else g.getAs[Number](c).doubleValue
+        val (mean, sd) = (num("avg_hours"), num("stddev_hours"))
+        // W1/P6/F1-F3: the cut from the summary's own scalars; written
+        // only when some row is past it
+        def anomalies = Stats.zScoreCut(cached, "hours_per_week", mean, sd, config.zThreshold)
+          .withColumnRenamed("hours_per_week_z_score", "hours_z_score")
+          .withColumn("anomaly_type", lit("hours_outlier"))
+          .withColumn("z_score", col("hours_z_score"))
+          .withColumn("detected_at", lit(ts))
+          .drop("timestamp")
+          .withColumn("timestamp", lit(ts))
+          .coalesce(1)
+        val frames =
+          Seq("summary_statistics" -> local(Seq(g), Summary.map(_._1))) ++
+          (if (Stats.anyPastCut(num("min_hours"), num("max_hours"), mean, sd, config.zThreshold))
+            Seq("anomalies" -> anomalies) else Nil) ++
+          countSpecs.map(t => t.table -> local(rowsOf(t.keys), t.keys ++ t.values)) :+
+          // X3: reference collects the full batch and insert_one's each
+          // row (spark_streaming.py:195-197); we append distributed.
+          ("raw_data" -> cached.drop("timestamp").withColumn("timestamp", lit(ts)))
+        writeConcurrently(sink, frames.filter { case (table, _) => tables.contains(table) })
+      }
     } finally { cached.unpersist(); () }
   }
 
@@ -137,7 +145,7 @@ final class Pipeline(sink: SnapshotSink, config: PipelineConfig = PipelineConfig
         .outputMode("update")
         .trigger(config.trigger)
         .option("checkpointLocation", s"$checkpointRoot/fused")
-        .foreachBatch { (df: DataFrame, epochId: Long) => runBatch(df, epochId) }
+        .foreachBatch { (df: DataFrame, epochId: Long) => runBatch(withoutAqe(df), epochId) }
         .start())
     } else {
       Seq("stats" -> StatsTables, "agg" -> AggTables).map { case (name, tables) =>
@@ -145,7 +153,7 @@ final class Pipeline(sink: SnapshotSink, config: PipelineConfig = PipelineConfig
           .outputMode("update")
           .trigger(config.trigger)
           .option("checkpointLocation", s"$checkpointRoot/$name")
-          .foreachBatch { (df: DataFrame, _: Long) => writeBatch(df, tables) }
+          .foreachBatch { (df: DataFrame, _: Long) => writeBatch(withoutAqe(df), tables) }
           .start()
       }
     }
@@ -162,6 +170,26 @@ object Pipeline {
     "gender_income", "work_hours", "occupation_stats", "raw_data")
 
   val Tables: Seq[String] = StatsTables ++ AggTables
+
+  /** Most rows the batch's grouped result may hold: the global row plus
+    * the five count tables' groups. The census domains give about 60
+    * (5 age groups, 16 educations and 2 genders by 2 income categories,
+    * 3 work-hours buckets, 15 occupations), so 1024 is wide headroom; a
+    * batch past it fails by this boundary's tag instead of growing the
+    * driver's share of the batch.
+    */
+  private val GroupedRowCeiling = 1024
+
+  /** `df` with AQE off on its session. Under `start` that session is
+    * the streaming query's own clone, so the caller's session keeps its
+    * setting. The batch body has no join and one shuffle of about 60
+    * rows; AQE would only add a job for that shuffle's stage and
+    * re-plan the result.
+    */
+  private def withoutAqe(df: DataFrame): DataFrame = {
+    df.sparkSession.conf.set("spark.sql.adaptive.enabled", "false")
+    df
+  }
 
   /** A grouped snapshot table: its grouping keys and aggregate columns. */
   private final case class CountTable(table: String, keys: Seq[String], values: Seq[String])

@@ -10,11 +10,11 @@ import scala.util.Random
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ops.Derive
 import graft.schema.CensusRecord
-import graft.sink.{InMemorySnapshotSink, SnapshotSink}
+import graft.sink.{InMemorySnapshotSink, ParquetSnapshotSink, SnapshotSink}
 import graft.stream.{Pipeline, PipelineConfig, Simulator}
 
 /** The one-pass census batch body (`Pipeline.runBatch`): equal output
@@ -180,11 +180,20 @@ class PipelineBatchSpec extends SparkSpec {
     assert(sink.inFlight.get == 0)
   }
 
-  test("a fused batch runs at most 12 jobs, each attributed to its query and batch") {
+  private val noAnomaly = withHours(Seq.fill(30)(Some(40)))
+
+  /** Runs `start` over one file of `rows` to completion and returns the
+    * queries and the properties of every job they ran. Asserts that the
+    * caller session's AQE setting is left as it was.
+    */
+  private def startedJobs(rows: Seq[CensusRecord], fused: Boolean, sink: SnapshotSink)
+      : (Seq[StreamingQuery], Seq[Properties]) = {
     val inDir = Files.createTempDirectory("graft_jobs_in").toString
     val ckpt = Files.createTempDirectory("graft_jobs_ckpt").toString
-    Simulator.writeBatchCsv(withAnomaly, inDir, 1700000200L)
+    Simulator.writeBatchCsv(rows, inDir, 1700000200L)
     val sentinel = "graft.spec.sentinel"
+    val aqe = "spark.sql.adaptive.enabled"
+    val aqeBefore = spark.conf.get(aqe)
     val jobs = new ConcurrentLinkedQueue[Properties]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.add(e.properties); () }
@@ -192,26 +201,47 @@ class PipelineBatchSpec extends SparkSpec {
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
     try {
-      val sink = new InMemorySnapshotSink
-      val q = new Pipeline(sink, PipelineConfig(fused = true, trigger = Trigger.AvailableNow(),
-        clock = () => 1700000200.0)).start(spark, inDir, ckpt).head
-      q.awaitTermination()
-      assert(sink.tableNames == Pipeline.Tables.toSet)
+      val qs = new Pipeline(sink, PipelineConfig(fused = fused, trigger = Trigger.AvailableNow(),
+        clock = () => 1700000200.0)).start(spark, inDir, ckpt)
+      qs.foreach(_.awaitTermination())
+      assert(spark.conf.get(aqe) == aqeBefore)
       // the listener bus delivers in order: once this job is seen, so
-      // is every job the query ran
+      // is every job the queries ran
       sc.setLocalProperty(sentinel, "1")
       try spark.range(1).count() finally sc.setLocalProperty(sentinel, null)
       val deadline = System.nanoTime() + 30e9.toLong
       while (!jobs.asScala.exists(_.getProperty(sentinel) != null) && System.nanoTime() < deadline)
         Thread.sleep(20)
-      val batchJobs = jobs.asScala.toSeq.filter(_.getProperty(sentinel) == null)
-      assert(batchJobs.nonEmpty)
-      batchJobs.foreach { p =>
-        assert(p.getProperty("sql.streaming.queryId") == q.id.toString)
-        assert(p.getProperty("streaming.sql.batchId") == "0")
-      }
-      info(s"${batchJobs.size} jobs in the batch")
-      assert(batchJobs.size <= 12, s"${batchJobs.size} jobs in one fused batch")
+      (qs, jobs.asScala.toSeq.filter(_.getProperty(sentinel) == null))
     } finally sc.removeSparkListener(listener)
+  }
+
+  private def parquetSink(): ParquetSnapshotSink =
+    new ParquetSnapshotSink(Files.createTempDirectory("graft_jobs_sink").toString)
+
+  for {
+    (sinkName, newSink) <- Seq[(String, () => SnapshotSink)](
+      "in-memory" -> (() => new InMemorySnapshotSink), "parquet" -> (() => parquetSink()))
+    (rowsName, rows, expected, tables) <- Seq(
+      (" with an anomaly row", withAnomaly, 3, Pipeline.Tables),
+      (" without one", noAnomaly, 2, Pipeline.Tables.filterNot(_ == "anomalies")))
+  } test(s"a fused batch$rowsName runs $expected jobs into the $sinkName sink, " +
+      "each attributed to its query and batch") {
+    val sink = newSink()
+    val (qs, batchJobs) = startedJobs(rows, fused = true, sink)
+    tables.foreach(t => assert(sink.read(spark, t).count() > 0, t))
+    batchJobs.foreach { p =>
+      assert(p.getProperty("sql.streaming.queryId") == qs.head.id.toString)
+      assert(p.getProperty("streaming.sql.batchId") == "0")
+    }
+    assert(batchJobs.size == expected, s"${batchJobs.size} jobs in one fused batch")
+  }
+
+  test("in two-query mode each query's batch runs 2 jobs") {
+    val (qs, batchJobs) = startedJobs(withAnomaly, fused = false, parquetSink())
+    assert(qs.size == 2)
+    val perQuery = batchJobs.groupBy(_.getProperty("sql.streaming.queryId")).view.mapValues(_.size).toMap
+    assert(perQuery == qs.map(_.id.toString -> 2).toMap)
+    assert(batchJobs.forall(_.getProperty("streaming.sql.batchId") == "0"))
   }
 }
