@@ -219,6 +219,18 @@ class PipelineBatchSpec extends SparkSpec {
   private def parquetSink(): ParquetSnapshotSink =
     new ParquetSnapshotSink(Files.createTempDirectory("graft_jobs_sink").toString)
 
+  test("a fused batch runs at most 12 jobs, each attributed to its query and batch") {
+    val sink = new InMemorySnapshotSink
+    val (qs, batchJobs) = startedJobs(withAnomaly, fused = true, sink)
+    assert(sink.tableNames == Pipeline.Tables.toSet)
+    assert(batchJobs.nonEmpty)
+    batchJobs.foreach { p =>
+      assert(p.getProperty("sql.streaming.queryId") == qs.head.id.toString)
+      assert(p.getProperty("streaming.sql.batchId") == "0")
+    }
+    assert(batchJobs.size <= 12, s"${batchJobs.size} jobs in one fused batch")
+  }
+
   for {
     (sinkName, newSink) <- Seq[(String, () => SnapshotSink)](
       "in-memory" -> (() => new InMemorySnapshotSink), "parquet" -> (() => parquetSink()))
