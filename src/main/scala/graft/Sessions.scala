@@ -1,9 +1,14 @@
 package graft
 
+import java.net.URI
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileContext, FileSystem}
 import org.apache.spark.sql.SparkSession
+
+import graft.fs.{NioLocalFileSystem, NioLocalFs}
 
 /** One place that builds every graft SparkSession, so session-wide conf
   * is set once at build time instead of mutated mid-query by loaders
@@ -20,6 +25,13 @@ import org.apache.spark.sql.SparkSession
   *  - `nanosAsLong`: the corpus stores `events.ts` as TIMESTAMP(NANOS),
   *    which Spark's vectorized parquet reader otherwise rejects;
   *    Tables.events converts the raw longs in-plan.
+  *  - `file:` bound to `graft.fs` for both Hadoop APIs (`fs.file.impl`
+  *    and `fs.AbstractFileSystem.file.impl`): without Hadoop's native
+  *    library the stock local file system forks `chmod` per file
+  *    created and `readlink` per rename check, about 60 processes per
+  *    census batch, half of them on the stream thread's checkpoint
+  *    commits. The graft classes do the same in-process and leave the
+  *    same files on disk.
   */
 object Sessions {
 
@@ -44,6 +56,30 @@ object Sessions {
       finally paths.close()
     }
 
+  /** [[local]]'s failure when `file:` does not resolve to `graft.fs`. */
+  final class LocalFsNotBound(message: String) extends IllegalStateException(message)
+
+  /** Checks that `file:` resolves to the `graft.fs` classes under `conf`
+    * for both Hadoop APIs, or throws [[LocalFsNotBound]].
+    */
+  private[graft] def requireLocalFsBound(conf: Configuration): Unit = {
+    val root = URI.create("file:///")
+    val fs = FileSystem.get(root, conf).getClass
+    val afs = FileContext.getFileContext(root, conf).getDefaultFileSystem.getClass
+    if (fs != classOf[NioLocalFileSystem] || afs != classOf[NioLocalFs])
+      throw new LocalFsNotBound(s"file: resolves to ${fs.getName} and ${afs.getName}, " +
+        "not graft.fs: the SparkContext was built outside Sessions.local, or a file: " +
+        "FileSystem was cached in this JVM before it (Hadoop caches FileSystems by " +
+        "scheme and user, not by conf)")
+  }
+
+  /** The graft session: a new one with the conf above, or the one this
+    * JVM already has. It does not rebind `file:` after the fact: it
+    * checks that `file:` resolves to `graft.fs` through the session's
+    * Hadoop conf (`FileSystem.get` and `FileContext`), and fails with
+    * [[LocalFsNotBound]] where it does not, rather than run with
+    * forking local I/O.
+    */
   def local(cpus: String, app: String): SparkSession = {
     val shufflePartitions =
       if (cpus == "*") Runtime.getRuntime.availableProcessors.toString else cpus
@@ -59,12 +95,15 @@ object Sessions {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir", warehouseDir)
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
       .getOrCreate()
     // getOrCreate() silently ignores every builder config — including
     // spark.sql.extensions — when a session already exists in this JVM;
     // re-register the native functions on whatever session came back so
     // similarity/dedup queries can never hit undefined-function errors
     graft.functions.GraftFunctions.ensureRegistered(s)
+    requireLocalFsBound(s.sessionState.newHadoopConf())
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -2,17 +2,21 @@ package graft.sink
 
 import java.time.LocalDate
 import java.util.UUID
+import java.util.concurrent.ConcurrentHashMap
 
 import scala.collection.mutable
 
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession, classic}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -54,14 +58,25 @@ trait SnapshotSink {
 final class ParquetSnapshotSink(root: String) extends SnapshotSink {
   import ParquetSnapshotSink._
 
-  override def write(table: String, df: DataFrame): Unit =
+  /** Each table's data schema, for reads: the schema of the last frame
+    * this sink wrote to it, else the one read from a file's footer.
+    * Reading with it skips the one-task job in which
+    * `spark.read.parquet` infers a schema from the footers; `batch_date`
+    * is still discovered from the directory names.
+    */
+  private val schemas = new ConcurrentHashMap[String, StructType]()
+
+  override def write(table: String, df: DataFrame): Unit = {
     if (df.isLocal) appendLocal(df, new Path(root, table))
     else df.withColumn("batch_date", BatchDate)
       .write.mode("append").partitionBy("batch_date")
       .parquet(s"$root/$table")
+    schemas.put(table, df.schema)
+    ()
+  }
 
   override def read(spark: SparkSession, table: String): DataFrame =
-    spark.read.parquet(s"$root/$table").drop("batch_date")
+    scan(spark, table).drop("batch_date")
 
   /** Time-bounded read that actually prunes: the dashboard's F4
     * predicate is on the `timestamp` double, which alone would scan
@@ -70,11 +85,25 @@ final class ParquetSnapshotSink(root: String) extends SnapshotSink {
     * `minEpochSeconds`'s own filter stays too, for sub-day precision.
     */
   def readSince(spark: SparkSession, table: String, minEpochSeconds: Double): DataFrame =
-    spark.read.parquet(s"$root/$table")
+    scan(spark, table)
       .filter(col("batch_date") >=
         to_date(timestamp_seconds(lit(math.floor(minEpochSeconds).toLong))))
       .filter(col("timestamp") >= minEpochSeconds)
       .drop("batch_date")
+
+  /** The table with its `batch_date` column. A table with no data file
+    * yet has no schema to give: it is read as before, so it fails as
+    * before.
+    */
+  private def scan(spark: SparkSession, table: String): DataFrame = {
+    val dir = s"$root/$table"
+    Option(schemas.get(table)).orElse(footerSchema(spark, new Path(dir))) match {
+      case Some(schema) =>
+        schemas.putIfAbsent(table, schema)
+        spark.read.schema(schema).parquet(dir)
+      case None => spark.read.parquet(dir)
+    }
+  }
 }
 
 object ParquetSnapshotSink {
@@ -84,6 +113,29 @@ object ParquetSnapshotSink {
     * expression.
     */
   private val BatchDate = to_date(timestamp_seconds(col("timestamp").cast("long")))
+
+  /** The data schema in the footer of one visible data file under
+    * `dir`, read on the driver as Spark's own inference reads it (which
+    * also takes one file's footer, in a job), or None with no such file.
+    */
+  private def footerSchema(spark: SparkSession, dir: Path): Option[StructType] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = dir.getFileSystem(conf)
+    if (!fs.exists(dir)) return None
+    val base = fs.makeQualified(dir).toUri.getPath
+    // no path segment below `dir` hidden, as file listing skips them
+    def visible(p: Path) = p.toUri.getPath.stripPrefix(base).split('/')
+      .forall(n => !n.startsWith(".") && !n.startsWith("_"))
+    val files = fs.listFiles(dir, true)
+    Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath)
+      .find(p => p.getName.endsWith(".parquet") && visible(p))
+      .map { p =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+        val footer = try reader.getFooter finally reader.close()
+        ParquetFileFormat.readSchemaFromFooter(new Footer(p, footer),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      }
+  }
 
   /** Appends a driver-resident frame to the table at `dir` without a
     * Spark job: one parquet file per `batch_date`, written by Spark's
