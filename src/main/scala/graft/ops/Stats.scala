@@ -3,11 +3,13 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.BatchConstant
+
 /** Statistics operators: A1 global multi-aggregate and the W1/P6/F1-F3
   * z-score anomaly detector (reference spark_streaming.py:78-120).
   *
-  * The detector is a literal cut: two batch scalars (mean, stddev) are
-  * broadcast back as literals, never computed by an empty-frame window
+  * The detector is a constant cut: two batch scalars (mean, stddev) are
+  * bound into the plan as constants, never computed by an empty-frame window
   * (`Window.partitionBy()`), which at 100 TB would funnel every row
   * through ONE partition (SURVEY §4, §7.4 risk 7). Where the scalars
   * come from is the caller's choice: [[zScoreOutliers]] spends a first
@@ -55,16 +57,19 @@ object Stats {
     zScoreCut(df, c, m, s, threshold)
   }
 
-  /** The cut: broadcasts `mean` and `stddev` as literals, derives
-    * `abs((c - mean) / stddev)` and keeps `z > threshold`. Returns the
-    * input rows plus a `<c>_z_score` column; empty when the F2 guard
-    * (`stddev > 0`, spark_streaming.py:106) fails.
+  /** The cut: binds `mean` and `stddev` as [[graft.functions.BatchConstant]]s
+    * (so a cut that is redone on every micro-batch generates the same
+    * code each time), derives `abs((c - mean) / stddev)` and keeps
+    * `z > threshold`. Returns the input rows plus a `<c>_z_score`
+    * column; empty when the F2 guard (`stddev > 0`,
+    * spark_streaming.py:106) fails.
     */
   def zScoreCut(df: DataFrame, c: String, mean: Double, stddev: Double,
       threshold: Double): DataFrame = {
     val zCol = s"${c}_z_score"
     if (!spreadOk(stddev)) df.withColumn(zCol, lit(null).cast("double")).limit(0)
-    else df.withColumn(zCol, abs((col(c) - lit(mean)) / lit(stddev)))
+    else df.withColumn(zCol,
+      abs((col(c) - BatchConstant.column(mean)) / BatchConstant.column(stddev)))
       .filter(col(zCol) > threshold)
   }
 

@@ -2,14 +2,17 @@ package graft.stream
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
-import graft.ops.{Derive, Grids, Stats}
+import graft.functions.{BatchConstant, KeyedCountAgg}
+import graft.ops.{Derive, Stats}
 import graft.schema.CensusSchema
 import graft.sink.SnapshotSink
 
@@ -46,24 +49,40 @@ final case class PipelineConfig(
   * windows — adding them would change late-file behavior (T8).
   *
   * Physics improved deliberately (SURVEY §4): a fused batch runs 3
-  * Spark jobs, 2 when no row passes the anomaly cut.
-  *  - One job aggregates the persisted batch in ONE grouping-sets pass
-  *    (the global summary row plus the five count tables) and collects
-  *    the whole result, about 60 rows, through `Grids.boundedRows`.
-  *    The global row gates emptiness (no row, no writes), supplies the
-  *    z-score scalars and, through its min/max hours, decides whether
-  *    any anomaly exists without a job.
+  * Spark jobs of one stage each, 2 when no row passes the anomaly cut.
+  *  - One pass over the persisted batch fills the cache and gathers
+  *    every aggregate the batch needs as one `Observation`: the summary
+  *    row, min/max hours, the row count and the five count tables as
+  *    one [[graft.functions.KeyedCountAgg]]. The pass is a write with
+  *    no output (`noop`), so it is one stage with no shuffle. The count
+  *    gates emptiness (0 rows, no writes), the summary supplies the
+  *    z-score scalars, and min/max hours decide whether any anomaly
+  *    exists without a job.
   *  - summary_statistics and the five count tables are built from the
-  *    collected rows as driver-local frames, which
-  *    `ParquetSnapshotSink` writes from the driver without a job.
+  *    observed row as driver-local frames, which `ParquetSnapshotSink`
+  *    writes from the driver without a job.
   *  - raw_data and anomalies stay distributed: one write job each,
   *    written by executors instead of collected row-at-a-time.
-  * The writes run concurrently, since each one is mostly fixed cost.
-  * `start` turns AQE off on the query's own session: the body has no
-  * join and its one shuffle carries the ~60 grouped rows, so AQE would
-  * only add a job for that shuffle stage and re-plan the result.
-  * In two-query mode each query runs the aggregation and its one
-  * distributed write (anomalies or raw_data): 2 jobs per batch.
+  * The writes run concurrently once the pass has returned, since each
+  * one is mostly fixed cost. The observation does not ride the
+  * raw_data write: anomalies would then have to wait for it.
+  *
+  * Steady-state batches compile no code. The per-batch values (the
+  * batch time, the cut's mean and stddev) enter the distributed plans
+  * as [[graft.functions.BatchConstant]]s rather than literals, and
+  * `start` drops the enrichment's `current_timestamp()` column (the
+  * body stamps its own), so every batch generates the same Java source
+  * and hits Spark's codegen cache.
+  *
+  * `start` sets the body's session (the query's own clone) for this
+  * shape: AQE off, since the body has no join and no shuffle, and one
+  * open file writer per write task, since every row of a batch carries
+  * the batch's one time stamp and so lands in one `batch_date`
+  * partition.
+  *
+  * In two-query mode each query's pass carries only its tables'
+  * aggregates, and each query runs the pass and its one distributed
+  * write (anomalies or raw_data): 2 jobs per batch.
   */
 final class Pipeline(sink: SnapshotSink, config: PipelineConfig = PipelineConfig()) {
   import Pipeline._
@@ -76,55 +95,69 @@ final class Pipeline(sink: SnapshotSink, config: PipelineConfig = PipelineConfig
 
   /** The batch body for `tables`: compute_batch_stats
     * (spark_streaming.py:76-120) and write_aggregations_to_mongo
-    * (spark_streaming.py:123-197) as one aggregation plus overlapped
+    * (spark_streaming.py:123-197) as one observed pass plus overlapped
     * writes. Two-query mode runs it once per query, for that query's
     * tables.
     */
   private def writeBatch(batch: DataFrame, tables: Seq[String]): Unit = {
     val ts = config.clock()
-    val cached = batch.persist()
+    // the body stamps `ts` itself: the enrichment's timestamp is dropped
+    val cached = batch.drop("timestamp").persist()
     try {
       val countSpecs = CountTables.filter(t => tables.contains(t.table))
-      // A1 + the five group-bys in one pass; the income counts ride
-      // along as pivoted conditional sums (P8's dynamic Mongo keys, as
-      // a fixed closed-set wide schema)
-      val aggregated = cached
-        .groupingSets((Nil +: countSpecs.map(_.keys)).map(_.map(col)), KeyCols.map(col): _*)
-        .agg(Aggs.head, Aggs.tail: _*)
-      val schema = aggregated.schema
-      val grouped = Grids.boundedRows(aggregated, GroupedRowCeiling, "census_batch_grouped")
-      def rowsOf(keys: Seq[String]): Seq[Row] = {
-        val id = groupingId(keys)
-        grouped.filter(_.getAs[Number]("gid").longValue == id).toSeq
-      }
-      // a small table as a driver-local frame: `cols` of `rows`, stamped
-      def local(rows: Seq[Row], cols: Seq[String]): DataFrame =
-        cached.sparkSession.createDataFrame(
-          rows.map(r => Row.fromSeq(cols.map(r.getAs[Any]) :+ ts)).asJava,
-          StructType(cols.map(schema(_)) :+ StructField("timestamp", DoubleType, nullable = false)))
-      rowsOf(Nil).headOption.foreach { g =>
+      val stats = tables.exists(StatsTables.contains)
+      // A1 + the five group-bys in one pass, gathered without a shuffle
+      val metrics = count(lit(1)).as("count") +:
+        ((if (stats) StatsAggs else Nil) ++
+          (if (countSpecs.isEmpty) Nil else Seq(KeyedCountAgg.column(
+            countSpecs.map(_.keys), Averaged.map(_._2), GroupedRowCeiling).as("keyed_counts"))))
+      val observation = Observation()
+      cached.observe(observation, metrics.head, metrics.tail: _*)
+        .write.format("noop").mode("append").save()
+      val g = Await.result(observation.future, Duration.Inf)
+      val groups = if (countSpecs.isEmpty) Nil else g.getSeq[Row](g.fieldIndex("keyed_counts"))
+      if (groups.size > GroupedRowCeiling)
+        throw new GroupCeilingExceeded(s"the census batch's count tables " +
+          s"(${countSpecs.map(_.table).mkString(", ")}) hold more than $GroupedRowCeiling " +
+          "groups, a bound set from the census domains (about 60 groups)")
+      if (g.getAs[Long]("count") > 0) {
+        // a small table as a driver-local frame: `rows` under `fields`, stamped
+        def local(rows: Seq[Seq[Any]], fields: Seq[StructField]): DataFrame =
+          cached.sparkSession.createDataFrame(rows.map(r => Row.fromSeq(r :+ ts)).asJava,
+            StructType(fields :+ StructField("timestamp", DoubleType, nullable = false)))
         def num(c: String): Double =
           if (g.isNullAt(g.fieldIndex(c))) Double.NaN else g.getAs[Number](c).doubleValue
-        val (mean, sd) = (num("avg_hours"), num("stddev_hours"))
-        // W1/P6/F1-F3: the cut from the summary's own scalars; written
-        // only when some row is past it
-        def anomalies = Stats.zScoreCut(cached, "hours_per_week", mean, sd, config.zThreshold)
-          .withColumnRenamed("hours_per_week_z_score", "hours_z_score")
-          .withColumn("anomaly_type", lit("hours_outlier"))
-          .withColumn("z_score", col("hours_z_score"))
-          .withColumn("detected_at", lit(ts))
-          .drop("timestamp")
-          .withColumn("timestamp", lit(ts))
-          .coalesce(1)
-        val frames =
-          Seq("summary_statistics" -> local(Seq(g), Summary.map(_._1))) ++
-          (if (Stats.anyPastCut(num("min_hours"), num("max_hours"), mean, sd, config.zThreshold))
-            Seq("anomalies" -> anomalies) else Nil) ++
-          countSpecs.map(t => t.table -> local(rowsOf(t.keys), t.keys ++ t.values)) :+
-          // X3: reference collects the full batch and insert_one's each
-          // row (spark_streaming.py:195-197); we append distributed.
-          ("raw_data" -> cached.drop("timestamp").withColumn("timestamp", lit(ts)))
-        writeConcurrently(sink, frames.filter { case (table, _) => tables.contains(table) })
+        val summary = if (!stats) Nil else {
+          val fields = Summary.map(c => g.schema(c._1))
+          Seq("summary_statistics" -> local(Seq(fields.map(f => g.getAs[Any](f.name))), fields))
+        }
+        val anomalies = if (!stats) Nil else {
+          val (mean, sd) = (num("avg_hours"), num("stddev_hours"))
+          // W1/P6/F1-F3: the cut from the summary's own scalars; written
+          // only when some row is past it
+          if (!Stats.anyPastCut(num("min_hours"), num("max_hours"), mean, sd, config.zThreshold)) Nil
+          else Seq("anomalies" -> Stats.zScoreCut(cached, "hours_per_week", mean, sd, config.zThreshold)
+            .withColumnRenamed("hours_per_week_z_score", "hours_z_score")
+            .withColumn("anomaly_type", lit("hours_outlier"))
+            .withColumn("z_score", col("hours_z_score"))
+            .withColumn("detected_at", BatchConstant.column(ts))
+            .withColumn("timestamp", BatchConstant.column(ts))
+            .coalesce(1))
+        }
+        val counted = countSpecs.zipWithIndex.map { case (t, set) =>
+          val rows = groups.filter(_.getInt(0) == set).map { r =>
+            val (n, sum) = (r.getSeq[Long](3), r.getSeq[Long](4))
+            val avgs = if (!t.averaged) Nil else Averaged.indices.map(m =>
+              if (n(m) == 0) null else sum(m).toDouble / n(m).toDouble)
+            r.getSeq[String](1) ++ avgs :+ r.getLong(2)
+          }
+          t.table -> local(rows, t.fields)
+        }
+        // X3: reference collects the full batch and insert_one's each
+        // row (spark_streaming.py:195-197); we append distributed.
+        val raw = Seq("raw_data" -> cached.withColumn("timestamp", BatchConstant.column(ts)))
+        writeConcurrently(sink, (summary ++ anomalies ++ counted ++ raw)
+          .filter { case (table, _) => tables.contains(table) })
       }
     } finally { cached.unpersist(); () }
   }
@@ -138,14 +171,16 @@ final class Pipeline(sink: SnapshotSink, config: PipelineConfig = PipelineConfig
     val reader = spark.readStream.schema(CensusSchema.schema)
       .option("header", "false")
     config.maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val stream = processed(reader.csv(inputDir))
+    // the batch body stamps its own time, so the enrichment's
+    // current_timestamp() (a new literal in every batch's plan) goes
+    val stream = processed(reader.csv(inputDir)).drop("timestamp")
 
     if (config.fused) {
       Seq(stream.writeStream
         .outputMode("update")
         .trigger(config.trigger)
         .option("checkpointLocation", s"$checkpointRoot/fused")
-        .foreachBatch { (df: DataFrame, epochId: Long) => runBatch(withoutAqe(df), epochId) }
+        .foreachBatch { (df: DataFrame, epochId: Long) => runBatch(forBatchBody(df), epochId) }
         .start())
     } else {
       Seq("stats" -> StatsTables, "agg" -> AggTables).map { case (name, tables) =>
@@ -153,7 +188,7 @@ final class Pipeline(sink: SnapshotSink, config: PipelineConfig = PipelineConfig
           .outputMode("update")
           .trigger(config.trigger)
           .option("checkpointLocation", s"$checkpointRoot/$name")
-          .foreachBatch { (df: DataFrame, _: Long) => writeBatch(withoutAqe(df), tables) }
+          .foreachBatch { (df: DataFrame, _: Long) => writeBatch(forBatchBody(df), tables) }
           .start()
       }
     }
@@ -171,46 +206,59 @@ object Pipeline {
 
   val Tables: Seq[String] = StatsTables ++ AggTables
 
-  /** Most rows the batch's grouped result may hold: the global row plus
-    * the five count tables' groups. The census domains give about 60
-    * (5 age groups, 16 educations and 2 genders by 2 income categories,
-    * 3 work-hours buckets, 15 occupations), so 1024 is wide headroom; a
-    * batch past it fails by this boundary's tag instead of growing the
-    * driver's share of the batch.
+  /** Most groups the batch's five count tables may hold together. The
+    * census domains give about 60 (5 age groups, 16 educations and 2
+    * genders by 2 income categories, 3 work-hours buckets, 15
+    * occupations), so 1024 is wide headroom; a batch past it fails with
+    * [[GroupCeilingExceeded]] instead of growing the driver's share of
+    * the batch.
     */
   private val GroupedRowCeiling = 1024
 
-  /** `df` with AQE off on its session. Under `start` that session is
-    * the streaming query's own clone, so the caller's session keeps its
-    * setting. The batch body has no join and one shuffle of about 60
-    * rows; AQE would only add a job for that shuffle's stage and
-    * re-plan the result.
+  /** A batch whose count tables went past their group ceiling. */
+  final class GroupCeilingExceeded(message: String) extends IllegalStateException(message)
+
+  /** `df` with the batch body's settings on its session. Under `start`
+    * that session is the streaming query's own clone, so the caller's
+    * session keeps its settings.
+    *  - AQE off: the body has no join and no shuffle, so AQE would only
+    *    re-plan each write.
+    *  - One concurrent output writer per write task: Spark then writes
+    *    a partitioned append through an open writer per partition value
+    *    instead of sorting the rows by `batch_date` first. A batch's rows
+    *    share one time stamp, so one writer takes them all. The time
+    *    stamp is a `BatchConstant`, which the planner cannot fold, so
+    *    without this it would plan that sort on every distributed write.
     */
-  private def withoutAqe(df: DataFrame): DataFrame = {
+  private def forBatchBody(df: DataFrame): DataFrame = {
     df.sparkSession.conf.set("spark.sql.adaptive.enabled", "false")
+    df.sparkSession.conf.set("spark.sql.maxConcurrentOutputFileWriters", "1")
     df
   }
 
-  /** A grouped snapshot table: its grouping keys and aggregate columns. */
-  private final case class CountTable(table: String, keys: Seq[String], values: Seq[String])
+  /** occupation_stats' averaged columns and what each one averages. */
+  private val Averaged = Seq("avg_age" -> "age", "avg_hours" -> "hours_per_week")
+
+  /** A grouped snapshot table: its grouping keys, then the averages
+    * when `averaged`, then `count`.
+    */
+  private final case class CountTable(table: String, keys: Seq[String], averaged: Boolean = false) {
+    def fields: Seq[StructField] = keys.map(StructField(_, StringType)) ++
+      (if (averaged) Averaged.map(a => StructField(a._1, DoubleType)) else Nil) :+
+      StructField("count", LongType, nullable = false)
+  }
 
   private val CountTables = Seq(
-    CountTable("age_group_distribution", Seq("age_group"), Seq("count")),
-    CountTable("education_income", Seq("education", "income_category"), Seq("count")),
-    CountTable("gender_income", Seq("gender", "income_category"), Seq("count")),
-    CountTable("work_hours", Seq("work_hours_category"), Seq("count")),
-    CountTable("occupation_stats", Seq("occupation"), Seq("avg_age", "avg_hours", "count")))
+    CountTable("age_group_distribution", Seq("age_group")),
+    CountTable("education_income", Seq("education", "income_category")),
+    CountTable("gender_income", Seq("gender", "income_category")),
+    CountTable("work_hours", Seq("work_hours_category")),
+    CountTable("occupation_stats", Seq("occupation"), averaged = true))
 
-  private val KeyCols: Seq[String] = CountTables.flatMap(_.keys).distinct
-
-  /** `grouping_id()` of the set grouped by `keys`: one bit per key
-    * column, most significant first, set when that column is
-    * aggregated away.
+  /** The summary_statistics columns, in table order. The income counts
+    * are conditional sums (P8's dynamic Mongo keys, as a fixed
+    * closed-set wide schema).
     */
-  private def groupingId(keys: Seq[String]): Long =
-    KeyCols.foldLeft(0L)((id, k) => id * 2 + (if (keys.contains(k)) 0 else 1))
-
-  /** The summary_statistics columns, in table order. */
   private val Summary: Seq[(String, Column)] = Seq(
     "avg_age" -> avg("age"),
     "stddev_age" -> stddev("age"),
@@ -225,11 +273,10 @@ object Pipeline {
     "count_low_income" ->
       sum(when(col("income_category") === "Low Income (<=50K)", 1).otherwise(0)))
 
-  private val Aggs: Seq[Column] = Summary.map { case (n, c) => c.as(n) } ++ Seq(
+  /** What the stats tables need: the summary and the hours' range. */
+  private val StatsAggs: Seq[Column] = Summary.map { case (n, c) => c.as(n) } ++ Seq(
     min("hours_per_week").as("min_hours"),
-    max("hours_per_week").as("max_hours"),
-    count(lit(1)).as("count"),
-    grouping_id().as("gid"))
+    max("hours_per_week").as("max_hours"))
 
   /** Runs each table's write on a thread created for this call, so it
     * inherits the caller's Spark local properties — the streaming

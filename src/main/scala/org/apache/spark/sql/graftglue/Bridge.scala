@@ -1,17 +1,23 @@
 package org.apache.spark.sql.graftglue
 
-import org.apache.spark.sql.{DataFrame, SparkSession, classic}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, classic}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** The one `private[sql]` doorway the graft library needs: building a
-  * DataFrame from a custom LogicalPlan ([[graft.plans.AsofJoinNode]]).
-  * `Dataset.ofRows` is private[sql], so this object lives under
+/** The `private[sql]` doorways the graft library needs: building a
+  * DataFrame from a custom LogicalPlan ([[graft.plans.AsofJoinNode]])
+  * and a Column from a catalyst expression that takes more than
+  * literal arguments ([[graft.functions.KeyedCountAgg]],
+  * [[graft.functions.BatchConstant]]). `Dataset.ofRows` and
+  * `ExpressionUtils` are private[sql], so this object lives under
   * `org.apache.spark.sql` — the standard extension-library pattern;
   * nothing else from the internal surface is re-exported.
   */
 object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  def column(expr: Expression): Column = classic.ExpressionUtils.column(expr)
 
   /** Re-wrap a localCheckpoint'd frame's `LogicalRDD` leaf with the
     * hash-partitioning + per-partition ordering its rows PROVABLY

@@ -3,10 +3,12 @@ package graft
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, LongType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{FreqAgg, LongArrayBuffer, TopKAgg, VecOuterSumAgg, VecSumAgg}
+import graft.functions.{FreqAgg, KeyedCountAgg, LongArrayBuffer, TopKAgg, VecOuterSumAgg,
+  VecSumAgg}
 
 /** [[graft.functions.LongArrayBuffer]], the one buffer codec of the
   * long-array aggregates: buffers survive the byte round trip at the
@@ -20,6 +22,9 @@ class LongArrayBufferSpec extends AnyFunSuite {
   private val vec = BoundReference(0, ArrayType(LongType, containsNull = false), nullable = true)
   private def long(i: Int) = BoundReference(i, LongType, nullable = true)
   private def vecRow(xs: Long*) = InternalRow(ArrayData.toArrayData(xs.toArray))
+  private def str(i: Int) = BoundReference(i, StringType, nullable = true)
+  private def strRow(a: String, b: String, m: Integer) =
+    InternalRow(UTF8String.fromString(a), UTF8String.fromString(b), m)
 
   /** Each aggregate with the input rows of two partitions. */
   private val cases: Seq[(String, LongArrayBuffer, Seq[InternalRow], Seq[InternalRow])] = Seq(
@@ -31,7 +36,11 @@ class LongArrayBufferSpec extends AnyFunSuite {
       Seq(5L, 5L, -1L, 9L, 5L).map(InternalRow(_)), Seq(9L, 9L, -1L, 7L).map(InternalRow(_))),
     ("topk_ll", TopKAgg(long(0), long(1), Literal(2)),
       Seq((3L, 1L), (-8L, 2L), (3L, 0L)).map { case (v, id) => InternalRow(v, id) },
-      Seq((10L, 4L), (3L, 5L)).map { case (v, id) => InternalRow(v, id) }))
+      Seq((10L, 4L), (3L, 5L)).map { case (v, id) => InternalRow(v, id) }),
+    ("keyed_counts", KeyedCountAgg(Seq(str(0), str(1)), Seq(BoundReference(2, IntegerType, nullable = true)),
+      Seq(Seq(0), Seq(0, 1)), ceiling = 1024),
+      Seq(strRow("a", "bb", 3), strRow("a", null, 5), strRow(null, "bb", null)),
+      Seq(strRow("a", "bb", -4), strRow("a longer key than 8 bytes", "", 7))))
 
   test("buffers round-trip through bytes: empty, one element, negatives, the long range") {
     val buffers = Seq(Array.emptyLongArray, Array(42L), Array(-1L, -123456789L),

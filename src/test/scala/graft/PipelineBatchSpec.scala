@@ -8,19 +8,24 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 import scala.util.Random
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
+  SparkListenerStageSubmitted}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 import graft.ops.Derive
-import graft.schema.CensusRecord
+import graft.schema.{CensusRecord, CensusSchema}
 import graft.sink.{InMemorySnapshotSink, ParquetSnapshotSink, SnapshotSink}
 import graft.stream.{Pipeline, PipelineConfig, Simulator}
 
 /** The one-pass census batch body (`Pipeline.runBatch`): equal output
   * to the two-pass [[ReferenceBatchBody]], the anomaly-existence
-  * decision at its edges, overlapped writes and their failures, and
-  * the batch's job count and attribution.
+  * decision at its edges, overlapped writes and their failures, the
+  * batch's job and stage counts and their attribution, its steady
+  * state compiling no code, and the written schemas.
   */
 class PipelineBatchSpec extends SparkSpec {
   import spark.implicits._
@@ -183,20 +188,25 @@ class PipelineBatchSpec extends SparkSpec {
   private val noAnomaly = withHours(Seq.fill(30)(Some(40)))
 
   /** Runs `start` over one file of `rows` to completion and returns the
-    * queries and the properties of every job they ran. Asserts that the
-    * caller session's AQE setting is left as it was.
+    * queries and the properties of every job and every stage they ran.
+    * Asserts that the caller session's settings for AQE and concurrent
+    * output writers are left as they were.
     */
   private def startedJobs(rows: Seq[CensusRecord], fused: Boolean, sink: SnapshotSink)
-      : (Seq[StreamingQuery], Seq[Properties]) = {
+      : (Seq[StreamingQuery], Seq[Properties], Seq[Properties]) = {
     val inDir = Files.createTempDirectory("graft_jobs_in").toString
     val ckpt = Files.createTempDirectory("graft_jobs_ckpt").toString
     Simulator.writeBatchCsv(rows, inDir, 1700000200L)
     val sentinel = "graft.spec.sentinel"
-    val aqe = "spark.sql.adaptive.enabled"
-    val aqeBefore = spark.conf.get(aqe)
+    val bodySettings = Seq("spark.sql.adaptive.enabled", "spark.sql.maxConcurrentOutputFileWriters")
+    val before = bodySettings.map(spark.conf.get)
     val jobs = new ConcurrentLinkedQueue[Properties]()
+    val stages = new ConcurrentLinkedQueue[Properties]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.add(e.properties); () }
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
+        stages.add(e.properties); ()
+      }
     }
     val sc = spark.sparkContext
     sc.addSparkListener(listener)
@@ -204,7 +214,7 @@ class PipelineBatchSpec extends SparkSpec {
       val qs = new Pipeline(sink, PipelineConfig(fused = fused, trigger = Trigger.AvailableNow(),
         clock = () => 1700000200.0)).start(spark, inDir, ckpt)
       qs.foreach(_.awaitTermination())
-      assert(spark.conf.get(aqe) == aqeBefore)
+      assert(bodySettings.map(spark.conf.get) == before)
       // the listener bus delivers in order: once this job is seen, so
       // is every job the queries ran
       sc.setLocalProperty(sentinel, "1")
@@ -212,7 +222,9 @@ class PipelineBatchSpec extends SparkSpec {
       val deadline = System.nanoTime() + 30e9.toLong
       while (!jobs.asScala.exists(_.getProperty(sentinel) != null) && System.nanoTime() < deadline)
         Thread.sleep(20)
-      (qs, jobs.asScala.toSeq.filter(_.getProperty(sentinel) == null))
+      def ofQueries(ps: ConcurrentLinkedQueue[Properties]) =
+        ps.asScala.toSeq.filter(_.getProperty(sentinel) == null)
+      (qs, ofQueries(jobs), ofQueries(stages))
     } finally sc.removeSparkListener(listener)
   }
 
@@ -221,7 +233,7 @@ class PipelineBatchSpec extends SparkSpec {
 
   test("a fused batch runs at most 12 jobs, each attributed to its query and batch") {
     val sink = new InMemorySnapshotSink
-    val (qs, batchJobs) = startedJobs(withAnomaly, fused = true, sink)
+    val (qs, batchJobs, _) = startedJobs(withAnomaly, fused = true, sink)
     assert(sink.tableNames == Pipeline.Tables.toSet)
     assert(batchJobs.nonEmpty)
     batchJobs.foreach { p =>
@@ -240,7 +252,7 @@ class PipelineBatchSpec extends SparkSpec {
   } test(s"a fused batch$rowsName runs $expected jobs into the $sinkName sink, " +
       "each attributed to its query and batch") {
     val sink = newSink()
-    val (qs, batchJobs) = startedJobs(rows, fused = true, sink)
+    val (qs, batchJobs, _) = startedJobs(rows, fused = true, sink)
     tables.foreach(t => assert(sink.read(spark, t).count() > 0, t))
     batchJobs.foreach { p =>
       assert(p.getProperty("sql.streaming.queryId") == qs.head.id.toString)
@@ -250,10 +262,90 @@ class PipelineBatchSpec extends SparkSpec {
   }
 
   test("in two-query mode each query's batch runs 2 jobs") {
-    val (qs, batchJobs) = startedJobs(withAnomaly, fused = false, parquetSink())
+    val (qs, batchJobs, _) = startedJobs(withAnomaly, fused = false, parquetSink())
     assert(qs.size == 2)
     val perQuery = batchJobs.groupBy(_.getProperty("sql.streaming.queryId")).view.mapValues(_.size).toMap
     assert(perQuery == qs.map(_.id.toString -> 2).toMap)
     assert(batchJobs.forall(_.getProperty("streaming.sql.batchId") == "0"))
+  }
+
+  test("with AQE off a fused batch runs 3 stages with an anomaly row, 2 without one, " +
+      "and its distributed writes sort nothing") {
+    for ((rows, expected) <- Seq(withAnomaly -> 3, noAnomaly -> 2)) {
+      val plans = new ConcurrentLinkedQueue[String]()
+      val listener = new SparkListener {
+        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+          case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription); ()
+          case _ => ()
+        }
+      }
+      val sc = spark.sparkContext
+      sc.addSparkListener(listener)
+      val (_, _, stages) = try startedJobs(rows, fused = true, parquetSink())
+        finally sc.removeSparkListener(listener)
+      assert(stages.size == expected, s"${stages.size} stages in one fused batch")
+      // one time stamp per batch: the writes need no sort by batch_date
+      val writes = plans.asScala.filter(_.contains("InsertIntoHadoopFsRelationCommand")).toSeq
+      assert(writes.size == expected - 1)
+      assert(writes.forall(!_.contains("Sort [")), writes.mkString("\n"))
+    }
+  }
+
+  test("a steady-state census batch compiles no code") {
+    // Spark's codegen cache is keyed by the generated source and the
+    // class loader, so each class compiles once for the driver and once
+    // more in the first executor task that needs it: the first batches
+    // warm both. A value inlined as a literal (the batch time, the
+    // cut's mean and stddev, the enrichment's current_timestamp())
+    // would change the source on every batch and compile it again.
+    val inDir = Files.createTempDirectory("graft_codegen_in").toString
+    val ckpt = Files.createTempDirectory("graft_codegen_ckpt").toString
+    // every batch has its own mean, stddev and time, and an anomaly row
+    (0 until 4).foreach { i =>
+      Simulator.writeBatchCsv(withHours(Seq.fill(29)(Some(40 + i % 3)) :+ Some(100 - i)),
+        inDir, 1700000300L + i)
+    }
+    // compilations so far, read as each batch body starts
+    val atStart = new ConcurrentLinkedQueue[Long]()
+    val qs = new Pipeline(parquetSink(), PipelineConfig(fused = true, trigger = Trigger.AvailableNow(),
+      maxFilesPerTrigger = Some(1), clock = () => {
+        atStart.add(CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
+        1700000300.0 + atStart.size
+      })).start(spark, inDir, ckpt)
+    qs.foreach(_.awaitTermination())
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val starts = atStart.asScala.toSeq
+    assert(starts.size == 4)
+    assert(compiled == starts(2),
+      s"${compiled - starts(2)} classes compiled in batches 3 and 4 (batches 1-2: ${starts(2) - starts.head})")
+  }
+
+  test("the written schemas, nullability included, are the pinned ones") {
+    // name[:type][!]: string by default, `!` for not nullable
+    def fields(spec: String): Seq[StructField] = spec.split(" ").toSeq.map { f =>
+      val (name, rest) = f.stripSuffix("!").span(_ != ':')
+      StructField(name, DataType.fromDDL(if (rest.isEmpty) "string" else rest.tail),
+        nullable = !f.endsWith("!"))
+    }
+    val enriched = CensusSchema.schema.fields.toSeq ++
+      fields("age_group! income_category! work_hours_category! capital_income_category!")
+    val pinned = Map(
+      "summary_statistics" -> fields("avg_age:double stddev_age:double min_age:int max_age:int " +
+        "avg_hours:double stddev_hours:double avg_capital_income:double " +
+        "stddev_capital_income:double count_high_income:bigint count_low_income:bigint " +
+        "timestamp:double!"),
+      "anomalies" -> (enriched ++ fields("hours_z_score:double anomaly_type! z_score:double " +
+        "detected_at:double! timestamp:double!")),
+      "age_group_distribution" -> fields("age_group count:bigint! timestamp:double!"),
+      "education_income" -> fields("education income_category count:bigint! timestamp:double!"),
+      "gender_income" -> fields("gender income_category count:bigint! timestamp:double!"),
+      "work_hours" -> fields("work_hours_category count:bigint! timestamp:double!"),
+      "occupation_stats" ->
+        fields("occupation avg_age:double avg_hours:double count:bigint! timestamp:double!"),
+      "raw_data" -> (enriched ++ fields("timestamp:double!")))
+    val sink = new InMemorySnapshotSink
+    onePass(sink, frame(withAnomaly), 1.0)
+    assert(sink.tableNames == pinned.keySet)
+    pinned.foreach { case (t, expected) => assert(sink.read(spark, t).schema == StructType(expected), t) }
   }
 }
